@@ -229,7 +229,7 @@ HEAVY = (
 #: so all core-count ratios read ~1 and the probe could not answer the
 #: question it exists for. This block times COMPUTE-DOMINATED jobs:
 #: each reads the same sf parquet inputs and blows them up in-memory by
-#: $SPARK_GRAFT_SCALE_MULT (default 16) deterministic key-offset
+#: $SPARK_GRAFT_SCALE_MULT (default 64) deterministic key-offset
 #: replicas INSIDE the timed region — no caching, no staged data, the
 #: replicate-explode is part of the measured plan — sizing the work to
 #: ~4-15 s at 32 cores so executor compute dominates the session
@@ -241,9 +241,24 @@ HEAVY = (
 SCALE_MULT = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "64"))
 
 
-def _replicate(df, mult: int, key_cols: tuple = ()):
+def _key_span(spark, sf_dir) -> int:
+    """Replica key offset: one past the largest key any scaling job
+    offsets, so replicas never collide at any scale factor. Computed
+    once, outside the timed region."""
+    from pyspark.sql import functions as SF
+
+    from dataintegration_csvprovider_spark.catalog import load_table
+
+    keys = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"),
+            ("events", "user_id"))
+    return 1 + max(
+        load_table(spark, sf_dir, t).agg(SF.max(c)).first()[0] for t, c in keys
+    )
+
+
+def _replicate(df, mult: int, key_cols: tuple = (), span: int = 0):
     """Deterministic k-fold in-memory blowup: each replica offsets the
-    named key columns by 10M·k, preserving per-key row counts (join
+    named key columns by span·k, preserving per-key row counts (join
     fan-out and window partition sizes stay constant while the total
     volume scales k-fold). Pure plan-side — computed fresh inside every
     timed run.
@@ -267,57 +282,57 @@ def _replicate(df, mult: int, key_cols: tuple = ()):
     )
     for c in key_cols:
         out = out.withColumn(
-            c, SF.col(c) + SF.col("__rep").cast("long") * SF.lit(10_000_000)
+            c, SF.col(c) + SF.col("__rep").cast("long") * SF.lit(span)
         )
     return out.drop("__rep")
 
 
-def _scale_agg(spark, sf_dir):
+def _scale_agg(spark, sf_dir, span):
     """q1-shape exact-decimal aggregation over mult x lineitem: the
-    codegen'd dsum/davg digit-split pipelines are the engine's hottest
+    codegen'd exact_sum digit-split pipelines are the engine's hottest
     per-row path; scaling is pure map-side compute + a 4-group shuffle."""
     from pyspark.sql import functions as SF
 
     from dataintegration_csvprovider_spark.catalog import load_table
-    from dataintegration_csvprovider_spark.queries.registry import davg, dsum
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     li = _replicate(load_table(spark, sf_dir, "lineitem"), SCALE_MULT)
     disc = SF.col("l_extendedprice") * (1 - SF.col("l_discount"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum(SF.col("l_quantity")).alias("sum_qty"),
-        dsum(SF.col("l_extendedprice")).alias("sum_base_price"),
-        dsum(disc).alias("sum_disc_price"),
-        davg(SF.col("l_discount")).alias("avg_disc"),
+        exact_sum(SF.col("l_quantity")).alias("sum_qty"),
+        exact_sum(SF.col("l_extendedprice")).alias("sum_base_price"),
+        exact_sum(disc).alias("sum_disc_price"),
+        exact_sum(SF.col("l_discount"), mean=True).alias("avg_disc"),
         SF.count(SF.lit(1)).alias("n"),
     )
 
 
-def _scale_join(spark, sf_dir):
+def _scale_join(spark, sf_dir, span):
     """mult x lineitem JOIN mult x orders on the replica-offset orderkey
     (per-key fan-out constant), aggregated by priority: shuffle-join
     scaling — the path most sensitive to reduce-side parallelism."""
     from pyspark.sql import functions as SF
 
     from dataintegration_csvprovider_spark.catalog import load_table
-    from dataintegration_csvprovider_spark.queries.registry import dsum
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     li = _replicate(
-        load_table(spark, sf_dir, "lineitem"), SCALE_MULT, ("l_orderkey",)
+        load_table(spark, sf_dir, "lineitem"), SCALE_MULT, ("l_orderkey",), span
     )
     od = _replicate(
-        load_table(spark, sf_dir, "orders"), SCALE_MULT, ("o_orderkey",)
+        load_table(spark, sf_dir, "orders"), SCALE_MULT, ("o_orderkey",), span
     )
     return (
         li.join(od, SF.col("l_orderkey") == SF.col("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(
-            dsum(SF.col("l_extendedprice")).alias("rev"),
+            exact_sum(SF.col("l_extendedprice")).alias("rev"),
             SF.count(SF.lit(1)).alias("n"),
         )
     )
 
 
-def _scale_window(spark, sf_dir):
+def _scale_window(spark, sf_dir, span):
     """Per-user running exact sum over mult x events (replica-offset
     user_id: mult x more window partitions of the original size) —
     sort+window scaling."""
@@ -325,19 +340,19 @@ def _scale_window(spark, sf_dir):
     from pyspark.sql import functions as SF
 
     from dataintegration_csvprovider_spark.catalog import load_table
-    from dataintegration_csvprovider_spark.queries.registry import dsum_win
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     ev = _replicate(
-        load_table(spark, sf_dir, "events"), SCALE_MULT * 2, ("user_id",)
+        load_table(spark, sf_dir, "events"), SCALE_MULT * 2, ("user_id",), span
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = ev.select(
-        "user_id", dsum_win(SF.col("value"), w).alias("running")
+        "user_id", exact_sum(SF.col("value"), over=w).alias("running")
     )
     return run.groupBy("user_id").agg(SF.max("running").alias("peak"))
 
 
-def _scale_text(spark, sf_dir):
+def _scale_text(spark, sf_dir, span):
     """Token document-frequency aggregation over mult x documents —
     explode + wide-key aggregation, the text-pipeline scaling shape."""
     from pyspark.sql import functions as SF
@@ -553,12 +568,13 @@ def main() -> None:
     # min-of-2 methodology; recorded separately from "queries" so the
     # round-over-round headline comparison is untouched
     scaling: dict[str, float] = {}
+    span = _key_span(spark, sf_dir)
     for name, fn in SCALING.items():
         sbest = None
         for _ in range(2):
             spark.catalog.clearCache()
             t0 = time.time()
-            _force(fn(spark, sf_dir))
+            _force(fn(spark, sf_dir, span))
             el = time.time() - t0
             sbest = el if sbest is None else min(sbest, el)
             gc.collect()

@@ -67,13 +67,13 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     # divisions stay in double (IEEE-exact both engines).
     #
     # Round-14 (r13 verdict item 8, guide §1.2 — the centroid-family
-    # treatment): the old single aggregation computed THREE dsum12
+    # treatment): the old single aggregation computed THREE scale-12
     # decimal pipelines per O(n·d²) exploded row, and two of them (sx,
     # sy) were redundant d²/2-fold — group (i,j)'s sx is Σ_rows x_i,
     # independent of j, so the same d per-dimension totals were
     # re-summed ~d/2 times each through the expensive per-row decimal
     # quantize. Now: (a) the d component sums ride ONE O(n·d) explode
-    # (same dsum12 accumulator over the same multiset of quantized
+    # (same scale-12 accumulator over the same multiset of quantized
     # values — order-independent, so the totals are bit-identical to
     # the old per-group sx/sy), broadcast-joined back onto the product
     # table (d rows, never null keys); (b) the O(n·d²) explode keeps
@@ -84,12 +84,12 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     # long): every non-null vector yields exactly one row per kept
     # (i,j) in both forms, so n, means, and cov are all unchanged —
     # oracle hash verified at sf0.01/sf0.1.
-    from ..queries.registry import dsum12
+    from ..queries.registry import exact_sum
 
     comp = (
         vecs.select(F.posexplode("v").alias("i", "x"))
         .groupBy("i")
-        .agg(dsum12(F.col("x").cast("double")).alias("s"))
+        .agg(exact_sum(F.col("x").cast("double"), scale=12).alias("s"))
     )
     xi = vecs.select(
         F.posexplode("v").alias("i", "x"),
@@ -106,7 +106,7 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         "i", (F.col("i") + F.col("dj")).alias("j")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        dsum12(F.col("x") * F.col("y").cast("double")).alias("sxy"),
+        exact_sum(F.col("x") * F.col("y").cast("double"), scale=12).alias("sxy"),
     )
     si = comp.select(F.col("i").alias("__ci"), F.col("s").alias("sx"))
     sj = comp.select(F.col("i").alias("__cj"), F.col("s").alias("sy"))

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..queries.registry import exact_sum
+
 
 def _with_nonnull_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     """Drop NULL vectors only. Unlike the cosine operators' helper,
@@ -157,15 +159,8 @@ def train_pq_codebooks(
             assigned.select("j", "code", F.posexplode("subvec").alias("dim", "x"))
             .groupBy("j", "code", "dim")
             .agg(
-                # r13: data-scaled component mean — 128-bit micros sum
-                # (same 6-dp per-row quantization), one int->double
-                (
-                    F.sum(
-                        (F.col("x").cast("decimal(18,6)") * F.lit(1_000_000))
-                        .cast("long").cast("decimal(38,0)")
-                    ).cast("double") / F.lit(1_000_000.0)
-                    / F.count(F.lit(1))
-                ).alias("c")
+                # data-scaled component mean: exact micros sum over rows
+                (exact_sum(F.col("x")) / F.count(F.lit(1))).alias("c")
             )
         )
         got = (

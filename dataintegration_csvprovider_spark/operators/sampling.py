@@ -355,22 +355,22 @@ def prototype_prune(
     # r13 decimal-sum migration: per-bucket component sums are
     # data-scaled — pico-unit 128-bit form (same 12-dp per-row
     # quantization as the old DECIMAL(28,12) accumulator).
-    # Round-13 optimization (guide §1.2): d inline dsum12 columns put d
+    # Round-13 optimization (guide §1.2): d inline scale-12 exact sums put d
     # decimal aggregation buffers in one hash aggregate; posexplode to
-    # (bucket, pos, v) rows + ONE dsum12 + a max/when pivot runs the
+    # (bucket, pos, v) rows + ONE scale-12 exact_sum + a max/when pivot runs the
     # identical exact pico-unit sums (bit-equal — same integers, same
     # single int->double) with one buffer, measured ~2.5x faster on the
     # 64-dim sf0.1 shape. __n (count incl. any null-vector rows) comes
     # from a separate tiny base aggregate because posexplode drops
     # null/empty arrays, exactly like getItem's null exclusion.
-    from ..queries.registry import dsum12
+    from ..queries.registry import exact_sum
 
     cnt = df.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("__n"))
     ex = df.select(
         bucket_col, F.posexplode(vec_col).alias("__pos", "__v")
     )
     per = ex.groupBy(bucket_col, "__pos").agg(
-        dsum12(F.col("__v").cast("double")).alias("__s")
+        exact_sum(F.col("__v").cast("double"), scale=12).alias("__s")
     )
     # r13 follow-up (guide §7.3 — driver analysis time is real cost):
     # the d-column max/when pivot put >1s of each invocation into

@@ -49,8 +49,8 @@ def session_stats(
     if value_col is not None:
         # r13 decimal-sum migration: per-session totals are data-scaled
         # (session row counts grow with event density), so the sum
-        # rides the exact micro-unit form (see queries/registry.dsum)
-        from ..queries.registry import dsum
+        # rides the exact micro-unit form (see queries/registry.exact_sum)
+        from ..queries.registry import exact_sum
 
-        aggs.append(dsum(F.col(value_col)).alias("total"))
+        aggs.append(exact_sum(F.col(value_col)).alias("total"))
     return sess.groupBy(key_col, "session_id").agg(*aggs)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..queries.registry import exact_sum
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential-order double dot product of two array columns."""
@@ -587,15 +589,8 @@ def trained_ivf_centroids(
         assigned.select("cluster", F.posexplode("v").alias("dim", "x"))
         .groupBy("cluster", "dim")
         .agg(
-            # r13: data-scaled component mean — 128-bit micros sum
-            # (same 6-dp per-row quantization), one int->double
-            (
-                F.sum(
-                    (F.col("x").cast("decimal(18,6)") * F.lit(1_000_000))
-                    .cast("long").cast("decimal(38,0)")
-                ).cast("double") / F.lit(1_000_000.0)
-                / F.count(F.lit(1))
-            ).alias("m")
+            # data-scaled component mean: exact micros sum over rows
+            (exact_sum(F.col("x")) / F.count(F.lit(1))).alias("m")
         )
     )
     return (

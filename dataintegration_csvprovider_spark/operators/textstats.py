@@ -578,11 +578,11 @@ def dsir_importance(
             ),
         )
     )
-    from ..queries.registry import dsum12
+    from ..queries.registry import exact_sum
 
     per_doc = scored.groupBy("__id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_words"),
-        (dsum12(F.col("lr")) / F.count(F.lit(1)))
+        (exact_sum(F.col("lr"), scale=12) / F.count(F.lit(1)))
         .cast("double").alias("mean_lr"),
     )
     ids = df.select(F.col(id_col).alias("__id")).distinct()

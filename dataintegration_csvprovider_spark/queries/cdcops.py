@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.cdc import apply_changeset, scd2
-from .registry import register, sql_dsum
+from .registry import register, sql_exact_sum
 
 
 def _feed(orders: DataFrame) -> DataFrame:
@@ -136,10 +136,10 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT o_custkey,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {dsum_p} AS total_spend
+           {sum_p} AS total_spend
     FROM orders
     GROUP BY o_custkey
-    """.format(dsum_p=sql_dsum("o_totalprice")),
+    """.format(sum_p=sql_exact_sum("o_totalprice")),
     doc="Incremental aggregate maintenance: a per-customer rollup built "
         "from a pre-cutoff base aggregate merged with a post-cutoff "
         "delta aggregate (full-outer join on the key, partial sums kept "
@@ -160,7 +160,9 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13: partials are exact integer MICRO-UNITS on a 128-bit
         # accumulator — mergeable by plain addition; the single
         # int->double conversion happens ONCE, after the merge, so
-        # base+delta equals a full dsum() recompute bit-for-bit
+        # base+delta equals a full exact_sum() recompute bit-for-bit.
+        # decimal-sum-ok: returns raw mergeable micros partials, not a
+        # double, so exact_sum's single conversion cannot apply here
         micros = (
             (F.col("o_totalprice").cast("decimal(18,6)") * F.lit(1_000_000))
             .cast("long")

@@ -21,7 +21,7 @@ from ..plans.conditionals import Conditional
 from ..plans.mapping_compiler import ColumnMapping, Mapping, compile_mapping
 from ..sinks.csv_sink import CsvSink
 from ..sources.csv_source import CsvSource, CsvSourceOptions
-from .registry import dsum, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 def _roundtrip(spark: SparkSession, df: DataFrame, table: str,
@@ -117,7 +117,7 @@ def q_csv_null_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_csv_decimal_comma",
     oracle=f"""
-    SELECT l_returnflag, {sql_dsum('l_quantity')} AS sum_qty
+    SELECT l_returnflag, {sql_exact_sum('l_quantity')} AS sum_qty
     FROM lineitem GROUP BY l_returnflag
     """,
     doc="T1/T2: comma-decimal CSV cells parse back to the exact doubles.",
@@ -140,7 +140,7 @@ def q_csv_decimal_comma(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     typed = compile_mapping(back, mapping, decimal_separator=",")
-    return typed.groupBy("l_returnflag").agg(dsum(F.col("l_quantity")).alias("sum_qty"))
+    return typed.groupBy("l_returnflag").agg(exact_sum(F.col("l_quantity")).alias("sum_qty"))
 
 
 @register(
@@ -153,7 +153,7 @@ def q_csv_decimal_comma(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'comma', COUNT(*),
            {d}
     FROM supplier
-    """.format(d=sql_dsum("s_acctbal")),
+    """.format(d=sql_exact_sum("s_acctbal")),
     doc="S1 dialect coverage: the same table round-tripped through "
         "tab-delimited/'-quoted and comma-delimited variants must agree.",
     tags=("csv", "dialect"),
@@ -182,7 +182,7 @@ def q_csv_dialects(spark: SparkSession, sf_dir: str) -> DataFrame:
                 back.agg(
                     F.lit(dialect).alias("dialect"),
                     F.count(F.lit(1)).alias("n"),
-                    dsum(F.col("s_acctbal")).alias("total"),
+                    exact_sum(F.col("s_acctbal")).alias("total"),
                 ).localCheckpoint(eager=True)
             )
         finally:
@@ -217,7 +217,7 @@ def q_csv_datetime_format(spark: SparkSession, sf_dir: str) -> DataFrame:
            strftime(MAX(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_seen
     FROM events WHERE user_id < 50
     GROUP BY event_type
-    """.format(d=sql_dsum("value")),
+    """.format(d=sql_exact_sum("value")),
     doc="Unstructured-text ETL: events rendered as pipe-delimited log "
         "lines, written through the text sink, re-read with "
         "spark.read.text and parsed back with one regexp_extract per "
@@ -256,7 +256,7 @@ def q_text_source_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             parsed.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                dsum(F.col("val")).alias("total"),
+                exact_sum(F.col("val")).alias("total"),
                 F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
                     "last_seen"
                 ),
@@ -276,7 +276,7 @@ def q_text_source_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
            {d} AS total_bal
     FROM customer
     GROUP BY 1
-    """.format(d=sql_dsum("c_acctbal")),
+    """.format(d=sql_exact_sum("c_acctbal")),
     doc="Case-insensitive grouping via Spark 4 collations: a mixed-case "
         "segment column (case varies by customer-key parity) grouped "
         "under UTF8_LCASE merges the variants *in the grouping "
@@ -295,7 +295,7 @@ def q_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.collate(F.col("seg_mixed"), "UTF8_LCASE").alias("seg"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            dsum(F.col("c_acctbal")).alias("total_bal"),
+            exact_sum(F.col("c_acctbal")).alias("total_bal"),
         )
         .select(
             F.lower(F.col("seg")).cast("string").alias("segment"),
@@ -316,7 +316,7 @@ def q_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT unnest(generate_series(0, 19999)) AS i),
          LATERAL (SELECT i % 7 AS bucket)
     GROUP BY bucket
-    """.format(d=sql_dsum("((i * 31) % 997) / 997.0")),
+    """.format(d=sql_exact_sum("((i * 31) % 997) / 997.0")),
     doc="Custom Python DataSource (Spark 4 datasource API, "
         "sources/pyds.py): a from-scratch format with declared schema "
         "and 8 planned input partitions, each generating its slice "
@@ -340,7 +340,7 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("id").cast("bigint").alias("min_id"),
         F.max("id").cast("bigint").alias("max_id"),
-        dsum(F.col("x")).alias("total_x"),
+        exact_sum(F.col("x")).alias("total_x"),
     )
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..sources.jsonl_source import JsonlSink, JsonlSource
-from .registry import dsum, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -43,7 +43,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_jsonl_skip_corrupt",
     oracle=f"""
-    SELECT lang, COUNT(*) AS n_docs, {sql_dsum('n_chars')} AS total_chars
+    SELECT lang, COUNT(*) AS n_docs, {sql_exact_sum('n_chars')} AS total_chars
     FROM documents WHERE doc_id < 500 GROUP BY lang
     """,
     doc="Defective-row skipping for JSONL: two unparseable lines injected "
@@ -70,7 +70,7 @@ def q_jsonl_skip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
-                dsum(F.col("n_chars")).alias("total_chars"),
+                exact_sum(F.col("n_chars")).alias("total_chars"),
             )
             .localCheckpoint(eager=True)
         )

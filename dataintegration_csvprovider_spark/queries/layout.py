@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 def _partition_filter_applied(df: DataFrame, col: str) -> bool:
@@ -55,7 +55,7 @@ def _has_dynamic_pruning(df: DataFrame) -> bool:
     "q_partition_prune_static",
     oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('value')} AS total_value,
+           {sql_exact_sum('value')} AS total_value,
            TRUE AS partition_pruned
     FROM events
     WHERE event_type = 'click'
@@ -79,7 +79,7 @@ def q_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             pruned.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("value")).alias("total_value"),
+                exact_sum(F.col("value")).alias("total_value"),
             )
             .withColumn("partition_pruned", F.lit(ok))
             # materialize before the temp dir vanishes
@@ -93,7 +93,7 @@ def q_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_partition_prune_dynamic",
     oracle=f"""
     SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('e.value')} AS total_value,
+           {sql_exact_sum('e.value')} AS total_value,
            TRUE AS dpp_used
     FROM events e
     JOIN (SELECT DISTINCT event_type FROM events
@@ -125,7 +125,7 @@ def q_partition_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             joined.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("value")).alias("total_value"),
+                exact_sum(F.col("value")).alias("total_value"),
             )
             .orderBy("event_type")
         )
@@ -140,7 +140,7 @@ def q_partition_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(4 AS BIGINT) AS n_files,
            CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('value')} AS total_value
+           {sql_exact_sum('value')} AS total_value
     FROM events
     """,
     doc="Small-file compaction: a fragmented write (32 shuffle "
@@ -165,7 +165,7 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.countDistinct("_file").alias("n_files"),
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("value")).alias("total_value"),
+                exact_sum(F.col("value")).alias("total_value"),
             )
             .localCheckpoint(eager=True)
         )
@@ -209,7 +209,7 @@ def _files_scanned(df: DataFrame, col: str, hi) -> tuple[int, int]:
       FROM lineitem
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('l_extendedprice')} AS total_price,
+           {sql_exact_sum('l_extendedprice')} AS total_price,
            TRUE AS zorder_not_worse,
            TRUE AS zorder_skips_half
     FROM lineitem WHERE l_partkey <= (SELECT hi FROM b)
@@ -281,7 +281,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("l_partkey") <= hi)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("l_extendedprice")).alias("total_price"),
+                exact_sum(F.col("l_extendedprice")).alias("total_price"),
             )
             # r13 (r12 verdict item 4): the old absolute pin
             # linear_scans_all flipped on larger fixtures whose
@@ -324,7 +324,7 @@ def _scan_has_pushed_filter(df: DataFrame, needle: str) -> bool:
     "q_scan_pruning",
     oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('l_extendedprice')} AS total_price,
+           {sql_exact_sum('l_extendedprice')} AS total_price,
            TRUE AS only_needed_columns_read,
            TRUE AS filter_pushed_to_scan
     FROM lineitem WHERE l_shipdate >= DATE '1995-01-01'
@@ -342,7 +342,7 @@ def q_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     q = li.filter(F.col("l_shipdate") >= F.lit("1995-01-01").cast("date")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        dsum(F.col("l_extendedprice")).alias("total_price"),
+        exact_sum(F.col("l_extendedprice")).alias("total_price"),
     )
     read_cols = set(_scan_read_columns(q))
     pruned_ok = read_cols == {"l_shipdate", "l_extendedprice"}
@@ -357,7 +357,7 @@ def q_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_aqe_coalesce",
     oracle=f"""
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('value')} AS total,
+           {sql_exact_sum('value')} AS total,
            TRUE AS aqe_coalesced_partitions
     FROM events GROUP BY event_type
     """,
@@ -374,7 +374,7 @@ def q_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        dsum(F.col("value")).alias("total"),
+        exact_sum(F.col("value")).alias("total"),
     )
     agg = agg.localCheckpoint(eager=True)  # materialize → final adaptive plan
     # the checkpoint severs the plan; re-derive the marker from a fresh
@@ -390,7 +390,7 @@ def q_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_parquet_codecs",
     oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           {sql_dsum('l_extendedprice')} AS total_price,
+           {sql_exact_sum('l_extendedprice')} AS total_price,
            TRUE AS roundtrip_exact,
            TRUE AS zstd_not_larger
     FROM lineitem
@@ -425,11 +425,11 @@ def q_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sn, zs = bytes_of("snappy"), bytes_of("zstd")
         back = spark.read.parquet(f"{d}/zstd").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum(F.col("l_extendedprice")).alias("total_price"),
+            exact_sum(F.col("l_extendedprice")).alias("total_price"),
         )
         src = li.agg(
             F.count(F.lit(1)).cast("bigint").alias("n0"),
-            dsum(F.col("l_extendedprice")).alias("t0"),
+            exact_sum(F.col("l_extendedprice")).alias("t0"),
         )
         return (
             back.crossJoin(F.broadcast(src))

@@ -34,7 +34,7 @@ from ..operators.similarity import (
     knn_ivf,
 )
 from ..operators.textstats import doc_fingerprint, language_id, text_quality
-from .registry import davg, dsum, dsum9, dsum12, register, sql_davg, sql_dsum, sql_dsum9, sql_dsum12
+from .registry import exact_sum, register, sql_exact_sum
 
 # DuckDB fragments reused across oracles ------------------------------------
 
@@ -1353,7 +1353,7 @@ _DIM = 64
 # (group rows grow with SF), so each rides the 128-bit micros form
 # (same 6-dp per-row quantization as the old DECIMAL(18,6) cast)
 _DUCK_CENTROID = ", ".join(
-    sql_dsum(f"CAST(embedding[{i + 1}] AS DOUBLE)")
+    sql_exact_sum(f"CAST(embedding[{i + 1}] AS DOUBLE)")
     + f" / COUNT(*) AS c{i}"
     for i in range(_DIM)
 )
@@ -1375,10 +1375,10 @@ _DUCK_CENTROID = ", ".join(
 )
 def q_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-13 optimization (guide §1.2 distributed-algorithm first):
-    # 64 inline dsum columns compile to ~192 aggregate buffers (hi/lo
+    # 64 inline exact_sum columns compile to ~192 aggregate buffers (hi/lo
     # split + guard count per dim) in ONE hash aggregate — measured
     # 3.4s at sf0.1 vs 1.8s for the pre-migration unsafe long form.
-    # posexplode to (label, pos, v) rows + ONE dsum + a max/when pivot
+    # posexplode to (label, pos, v) rows + ONE exact_sum + a max/when pivot
     # back to flat columns runs the identical exact integer micro-unit
     # sums (bit-equal, probed) in 1.1s: the explode is codegen'd and
     # the shuffle carries the same 64 partial sums per label either
@@ -1390,7 +1390,7 @@ def q_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     ex = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
     per = ex.groupBy("label", "pos").agg(
-        dsum(F.col("v").cast("double")).alias("s")
+        exact_sum(F.col("v").cast("double")).alias("s")
     )
     # r13 follow-up (guide §7.3 — driver analysis time is real cost):
     # the 64-column max/when pivot put ~1.1s of every invocation into
@@ -3623,7 +3623,7 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the Σdf² self-join that makes the oracle cheap. The r10
     # sweep's 104s total for this name was the SPARK side's cold-start
     # (~60s first-query JVM/codegen warmup), not oracle time.
-    oracle="""
+    oracle=f"""
     WITH N AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
     terms AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -3645,13 +3645,13 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     norms AS (
       SELECT doc_id,
-             sqrt((CAST(CAST(SUM(CAST(CAST(CAST(w * w AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0))
+             sqrt({sql_exact_sum("w * w", scale=12)})
                AS nrm
       FROM w GROUP BY doc_id
     ),
     dots AS (
       SELECT a.doc_id AS a, b.doc_id AS b,
-             (CAST(CAST(SUM(CAST(CAST(CAST(a.w * b.w AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) AS dot
+             {sql_exact_sum("a.w * b.w", scale=12)} AS dot
       FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
     )
@@ -3740,7 +3740,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy: the first consumer (dense prune's collect, or the prefix
     # path's u_norm join action) materializes it
     norms = w.groupBy("doc_id").agg(
-        F.sqrt(dsum12(F.col("w") * F.col("w"))).alias("nrm")
+        F.sqrt(exact_sum(F.col("w") * F.col("w"), scale=12)).alias("nrm")
     ).localCheckpoint(eager=False)
     # Candidate generation is the AllPairs prefix filter (Bayardo,
     # Ma & Srikant, WWW'07): on UNIT vectors, rank each doc's terms
@@ -3805,7 +3805,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv.join(F.broadcast(wa_frame(w)), "a")
         .join(F.broadcast(wb_frame(w)), ["b", "tid"])
         .groupBy("a", "b")
-        .agg(dsum12(F.col("wa") * F.col("wb")).alias("dot"))
+        .agg(exact_sum(F.col("wa") * F.col("wb"), scale=12).alias("dot"))
     )
     # cosine is REPORTED at 9-decimal precision: the decimal-cast
     # rounding mode at exact dyadic midpoints (HALF_UP vs HALF_EVEN)
@@ -3864,6 +3864,17 @@ def wb_frame(w: DataFrame) -> DataFrame:
     return w.select(F.col("doc_id").alias("b"), "tid", F.col("w").alias("wb"))
 
 
+def _shared_term_dtype(vocab: int):
+    """Dtype of the indicator matmul that counts shared terms. A count
+    is at most the vocabulary width, and float32 holds every integer
+    below 2^24 exactly (so does every BLAS partial sum, all of them
+    non-negative integers no larger than the total); wider vocabularies
+    count in float64."""
+    import numpy as np
+
+    return np.float32 if vocab < 2**24 else np.float64
+
+
 def _tfidf_dense_prune_survivors(
     spark: SparkSession, w: DataFrame, norms: DataFrame
 ) -> DataFrame:
@@ -3920,6 +3931,7 @@ def _tfidf_dense_prune_survivors(
         if i is not None:
             nrm[i] = x
     bc = spark.sparkContext.broadcast((ids, Wm, nrm))
+    ct = _shared_term_dtype(v)
     # per-task block: cap the unpacked block slice at ~32 MB of float64
     block = max(128, min(2048, 4_000_000 // max(v, 1)))
     nb = -(-n // block)
@@ -3935,11 +3947,8 @@ def _tfidf_dense_prune_survivors(
                 ra = slice(bi * block, min((bi + 1) * block, n))
                 rb = slice(bj * block, min((bj + 1) * block, n))
                 dot = W_b[ra] @ W_b[rb].T
-                # shared-term counts: float32 matmul of indicators is
-                # exact for counts < 2^24 (vocab is far below that)
-                nt = (
-                    nz[ra].astype(np.float32) @ nz[rb].astype(np.float32).T
-                ).astype(np.float64)
+                # shared-term counts: exact indicator matmul
+                nt = (nz[ra].astype(ct) @ nz[rb].astype(ct).T).astype(np.float64)
                 nanb = nrm_b[ra][:, None] * nrm_b[rb][None, :]
                 keep = dot >= nanb * (0.9 - 5e-10 - (nt + 8.0) * eps) - nt * 5e-13
                 if bi == bj:
@@ -3966,7 +3975,7 @@ def _tfidf_blocked_prune_survivors(
     materialize O(cells) on the driver).
 
     Same mathematics as :func:`_tfidf_dense_prune_survivors` — float64
-    block dots, exact float32 indicator-matmul shared-term counts, the
+    block dots, exact indicator-matmul shared-term counts, the
     identical per-pair keep bound — so the SAME soundness argument
     holds for any BLAS summation order (all products positive), and
     survivors feed the unchanged exact-decimal verification: outputs
@@ -3997,6 +4006,7 @@ def _tfidf_blocked_prune_survivors(
     block = max(128, min(4096, 4_000_000 // max(v, 1)))
     nb = -(-n // block)
     bc = spark.sparkContext.broadcast((ids_arr, tids_u, nrm, block, n, v))
+    ct = _shared_term_dtype(v)
 
     # block assignment rides a broadcast-joined (doc_id, bi) map — n
     # tiny rows, Arrow-created; deterministic (rank in the sorted ids)
@@ -4055,8 +4065,7 @@ def _tfidf_blocked_prune_survivors(
                 rb = slice(bj * blk, bj * blk + B.shape[0])
                 dot = A @ B.T
                 nt = (
-                    (A != 0.0).astype(np.float32)
-                    @ (B != 0.0).astype(np.float32).T
+                    (A != 0.0).astype(ct) @ (B != 0.0).astype(ct).T
                 ).astype(np.float64)
                 nanb = nrm_b[ra][:, None] * nrm_b[rb][None, :]
                 keep = (
@@ -4492,16 +4501,8 @@ def q_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_ratio(docs).groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("zlib_len").cast("bigint").alias("total_zlib"),
-        # r13: 9-dp nano-unit 128-bit sum — same per-row quantization
-        # and (in the pinned-constant range, |sum| << 2^22) the same
-        # double as the old decimal sum, but exact at any SF
-        F.sum(
-            (F.col("compression_ratio").cast("decimal(20,9)")
-             * F.lit(1_000_000_000)).cast("decimal(38,0)")
-        ).cast("double").alias("__ratio_nanos"),
-    ).withColumn(
-        "ratio_sum", (F.col("__ratio_nanos") / F.lit(1_000_000_000.0))
-    ).drop("__ratio_nanos")
+        exact_sum(F.col("compression_ratio"), scale=9).alias("ratio_sum"),
+    )
 
 
 @register(
@@ -5171,7 +5172,7 @@ def q_multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_embedding_profile",
-    oracle="""
+    oracle=f"""
     SELECT label,
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
            CAST(COUNT(*) FILTER (WHERE embedding IS NULL) AS BIGINT)
@@ -5183,7 +5184,7 @@ def q_multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS BIGINT) AS n_zero,
            CAST(MIN(len(embedding)) AS INT) AS min_dim,
            CAST(MAX(len(embedding)) AS INT) AS max_dim,
-           (CAST(CAST(SUM(CAST(CAST(CAST(sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS DECIMAL(22,9)) AS DECIMAL(38,9)) * 1000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000.0) AS norm_sum
+           {sql_exact_sum("sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))", scale=9)} AS norm_sum
     FROM embeddings GROUP BY label
     """,
     doc="Vector-column data-quality profile (the embeddings analog of "
@@ -5213,15 +5214,15 @@ def q_embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_zero"),
         F.min(F.size("embedding")).cast("int").alias("min_dim"),
         F.max(F.size("embedding")).cast("int").alias("max_dim"),
-        # dsum9, not dsum12: norm_sum is an IRRATIONAL-valued sum
-        # reported raw — see the dsum9 quantum note
-        dsum9(F.sqrt(sq)).alias("norm_sum"),
+        # scale 9, not 12: norm_sum is an IRRATIONAL-valued sum
+        # reported raw (OPTIMIZATION_r14.md "Exact sums")
+        exact_sum(F.sqrt(sq), scale=9).alias("norm_sum"),
     )
 
 
 @register(
     "q_dsir_importance",
-    oracle="""
+    oracle=f"""
     WITH rawt AS (
       SELECT doc_id,
              unnest(list_filter(string_split(text, ' '), t -> t <> ''))
@@ -5247,7 +5248,7 @@ def q_embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM rawt r JOIN cr USING (w) LEFT JOIN ct USING (w), tot
     ), per AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-             CAST((CAST(CAST(SUM(CAST(CAST(CAST(lr AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+             CAST({sql_exact_sum("lr", scale=12)}
                   / COUNT(*) AS DOUBLE) AS mean_lr
       FROM scored GROUP BY doc_id
     )
@@ -5958,7 +5959,7 @@ def _duck_logreg_sql(
         # the old DECIMAL(28,12) accumulator, so in-range trajectories
         # are bit-identical)
         sums = ", ".join(
-            f"{sql_dsum12(f'({sig} - f.y) * {x}')} AS g{j}"
+            f"{sql_exact_sum(f'({sig} - f.y) * {x}', scale=12)} AS g{j}"
             for j, x in enumerate(feats)
         )
         # MATERIALIZED is load-bearing: without it DuckDB inlines the
@@ -6117,7 +6118,7 @@ def _qc_train(
         sig = _qc_sig(w)
         g = feats.agg(
             *[
-                dsum12((sig - F.col("y")) * xj).alias(f"g{j}")
+                exact_sum((sig - F.col("y")) * xj, scale=12).alias(f"g{j}")
                 for j, xj in enumerate(xs)
             ]
         ).collect()[0]
@@ -6157,7 +6158,7 @@ def _qc_train(
     )
     SELECT CAST(y AS INT) AS label,
            CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(s AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+           ROUND({sql_exact_sum("s", scale=12)}
                  / CAST(COUNT(*) AS DOUBLE), 9) AS mean_score,
            ROUND(CAST(COUNT(*) FILTER (WHERE s >= 0.5) AS DOUBLE)
                  / CAST(COUNT(*) AS DOUBLE), 9) AS frac_ge_half
@@ -6187,7 +6188,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.round(
-                dsum12(F.col("s")) / F.count(F.lit(1)).cast("double"),
+                exact_sum(F.col("s"), scale=12) / F.count(F.lit(1)).cast("double"),
                 9,
             ).alias("mean_score"),
             F.round(
@@ -7181,7 +7182,7 @@ def _duck_bm25_over(src: str, pfx: str) -> str:
       CROSS JOIN {pfx}_n n),
     {pfx}_bm AS (
       SELECT doc_id,
-             round((CAST(CAST(SUM(CAST(CAST(CAST(s AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0), 9)
+             round({sql_exact_sum("s", scale=12)}, 9)
                AS score
       FROM {pfx}_per GROUP BY doc_id)"""
 
@@ -7352,7 +7353,7 @@ def q_bm25_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg AS MATERIALIZED (
       SELECT variant, y,
              CAST(COUNT(*) AS BIGINT) AS n,
-             (CAST(CAST(SUM(CAST(CAST(CAST(s AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+             {sql_exact_sum("s", scale=12)}
                / CAST(COUNT(*) AS DOUBLE) AS mean_raw,
              CAST(COUNT(*) FILTER (WHERE s >= 0.5) AS DOUBLE)
                / CAST(COUNT(*) AS DOUBLE) AS frac_raw
@@ -7697,7 +7698,7 @@ def _hb_variant_sql(p: str, c: str) -> str:
       CROSS JOIN {p}stats s),
     {p}lex AS (
       SELECT query_id, id,
-             round((CAST(CAST(SUM(CAST(CAST(CAST(sc AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0), 9)
+             round({sql_exact_sum("sc", scale=12)}, 9)
                AS score
       FROM {p}per GROUP BY query_id, id),
     {p}lrank AS (
@@ -7983,7 +7984,7 @@ def q_hybrid_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "id", (odds * tfpart).alias("s"))
         )
         scores = per.groupBy("query_id", "id").agg(
-            F.round(dsum12(F.col("s")), 9).alias("score")
+            F.round(exact_sum(F.col("s"), scale=12), 9).alias("score")
         )
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("id")

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, dsum12, register, sql_dsum, sql_dsum12
+from .registry import exact_sum, register, sql_exact_sum
 
 _DEC = "decimal(28,6)"
 _COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -39,12 +39,12 @@ _COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         # r13 decimal-sum migration: lineitem moment sums are
         # data-scaled (price^2 sums ~1e16 at sf1) — 128-bit micros form
         sums=",\n             ".join(
-            f"{sql_dsum(a)} AS s_{a}"
+            f"{sql_exact_sum(a)} AS s_{a}"
             for a in _COLS
         )
         + ",\n             "
         + ",\n             ".join(
-            f"{sql_dsum(f'{a} * {b}')} AS s_{a}_{b}"
+            f"{sql_exact_sum(f'{a} * {b}')} AS s_{a}_{b}"
             for i, a in enumerate(_COLS)
             for b in _COLS[i:]
         ),
@@ -68,10 +68,10 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count(F.lit(1)).alias("n")]
     for a in _COLS:
-        aggs.append(dsum(F.col(a)).alias(f"s_{a}"))
+        aggs.append(exact_sum(F.col(a)).alias(f"s_{a}"))
     for i, a in enumerate(_COLS):
         for b in _COLS[i:]:
-            aggs.append(dsum(F.col(a) * F.col(b)).alias(f"s_{a}_{b}"))
+            aggs.append(exact_sum(F.col(a) * F.col(b)).alias(f"s_{a}_{b}"))
     m = li.agg(*aggs)
     rows = []
     for i, a in enumerate(_COLS):
@@ -192,7 +192,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n,
            MIN(price) AS lo,
            MAX(price) AS hi,
-           {sql_dsum('price')} AS total
+           {sql_exact_sum('price')} AS total
     FROM ranked GROUP BY bin
     """,
     doc="Quantile feature binning (quartiles over order totalprice): "
@@ -227,7 +227,7 @@ def q_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("price").alias("lo"),
         F.max("price").alias("hi"),
-        dsum(F.col("price")).alias("total"),
+        exact_sum(F.col("price")).alias("total"),
     )
 
 
@@ -341,19 +341,19 @@ def q_quantile_bin_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_embedding_covariance",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT embedding AS e FROM embeddings WHERE embedding IS NOT NULL
     )
     SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
            CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*), 9)
              AS mean_i,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*), 9)
              AS mean_j,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) * CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*)
-           - ((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*))
-             * ((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*)), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE) * CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*)
+           - ({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*))
+             * ({sql_exact_sum("CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*)), 9)
              AS cov
     FROM v, range(64) t(i), range(64) u(j)
     WHERE j >= i
@@ -363,7 +363,7 @@ def q_quantile_bin_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(operators/linalg.py covariance_exact): per-row coordinate "
         "products are single IEEE doubles, sums run through "
         "decimal(28,12) (order-independent), divisions happen in double "
-        "after the cast (sql_davg convention), and the outputs report "
+        "after the cast (sql_exact_sum mean convention), and the outputs report "
         "at 9-decimal precision (the tfidf convention: a float32 "
         "coordinate's terminating decimal expansion can land exactly on "
         "a 1e-12 midpoint, where Spark and DuckDB round differently — "
@@ -466,7 +466,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_prototype_prune",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT vec_id, embedding AS e,
              4 * CASE WHEN e[1] >= 0 THEN 1 ELSE 0 END
@@ -475,7 +475,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings WHERE embedding IS NOT NULL
     ), cent AS (
       SELECT bucket, CAST(i AS INT) AS i,
-             ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+             ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)}
                    / COUNT(*), 9) AS c,
              COUNT(*) AS n_bucket
       FROM v, range(64) t(i) GROUP BY bucket, i
@@ -768,13 +768,13 @@ def q_grouped_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_label_centroid_similarity",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT label, embedding AS e FROM embeddings
       WHERE embedding IS NOT NULL
     ), cent AS (
       SELECT label, CAST(i AS INT) AS i,
-             ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+             ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)}
                    / COUNT(*), 9) AS c
       FROM v, range(64) t(i) GROUP BY label, i
     ), dots AS (
@@ -813,7 +813,7 @@ def q_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data-scaled — pico-unit form (same 12-dp per-row quantization)
     cent = xi.groupBy("label", "i").agg(
         F.round(
-            dsum12(F.col("x").cast("double")) / F.count(F.lit(1)),
+            exact_sum(F.col("x").cast("double"), scale=12) / F.count(F.lit(1)),
             9,
         ).alias("c")
     )
@@ -1058,19 +1058,19 @@ def q_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sufficient statistics are associative, so base + delta must equal
     # the full pass bit-for-bit (same law q_incremental_agg pins for
     # decimal partial sums, here lifted to second moments / covariance)
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT embedding AS e FROM embeddings WHERE embedding IS NOT NULL
     )
     SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
            CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*), 9)
              AS mean_i,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*), 9)
              AS mean_j,
-           ROUND((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) * CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*)
-           - ((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*))
-             * ((CAST(CAST(SUM(CAST(CAST(CAST(CAST(e[CAST(j AS INT) + 1] AS DOUBLE) AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0) / COUNT(*)), 9)
+           ROUND({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE) * CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*)
+           - ({sql_exact_sum("CAST(e[CAST(i AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*))
+             * ({sql_exact_sum("CAST(e[CAST(j AS INT) + 1] AS DOUBLE)", scale=12)} / COUNT(*)), 9)
              AS cov
     FROM v, range(8) t(i), range(8) u(j)
     WHERE j >= i

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, dsum12, register, sql_dsum, sql_dsum12
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -184,7 +184,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
            {d} AS attributed_revenue
     FROM touches WHERE rn = 1
     GROUP BY channel
-    """.format(d=sql_dsum("revenue")),
+    """.format(d=sql_exact_sum("revenue")),
     doc="Last-touch attribution: each purchase credits its revenue to "
         "the user's most recent view/click in the prior 24h (ties on "
         "event_id). A bounded interval join on the user key feeds one "
@@ -228,7 +228,7 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return last.groupBy("channel").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_purchases"),
-        dsum(F.col("revenue")).alias("attributed_revenue"),
+        exact_sum(F.col("revenue")).alias("attributed_revenue"),
     )
 
 
@@ -264,7 +264,7 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            round({d}, 6)
              AS attributed_revenue
     FROM credited GROUP BY channel
-    """.format(d=sql_dsum12("credit")),
+    """.format(d=sql_exact_sum("credit", scale=12)),
     doc="Position-based (U-shaped 40/20/40) multi-touch attribution — "
         "the standard middle ground between last-touch (q_last_touch_"
         "attribution) and linear credit: within each purchase's 24h "
@@ -323,5 +323,5 @@ def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return credited.groupBy("channel").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_touches"),
         F.count_distinct("purchase_id").cast("bigint").alias("n_purchases"),
-        F.round(dsum12(F.col("credit")), 6).alias("attributed_revenue"),
+        F.round(exact_sum(F.col("credit"), scale=12), 6).alias("attributed_revenue"),
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from .registry import davg, dsum12, register, sql_davg, sql_dsum12
+from .registry import exact_sum, register, sql_exact_sum
 
 
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -313,12 +313,12 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
            CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-           {davg_t} AS avg_doc_tokens,
+           {avg_t} AS avg_doc_tokens,
            CAST(MAX(n_tokens) AS BIGINT) AS max_doc_tokens,
            CAST(COUNT(*) AS DOUBLE) / (SELECT n_all FROM tot)
              AS corpus_frac
     FROM t GROUP BY GROUPING SETS ((lang), ())
-    """.format(davg_t=sql_davg("n_tokens")),
+    """.format(avg_t=sql_exact_sum("n_tokens", mean=True)),
     doc="The corpus datacard — the per-slice summary every dataset "
         "datasheet publishes (docs, distinct texts = trivial-dup "
         "signal, sources, token/char volume, doc-length profile, "
@@ -349,7 +349,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("source").cast("bigint").alias("n_sources"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
-            davg(F.col("n_tokens")).alias("avg_doc_tokens"),
+            exact_sum(F.col("n_tokens"), mean=True).alias("avg_doc_tokens"),
             F.max("n_tokens").cast("bigint").alias("max_doc_tokens"),
             (F.count(F.lit(1)).cast("double") / F.lit(float(n_all))).alias(
                 "corpus_frac"
@@ -450,7 +450,7 @@ def q_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
            round({d}, 9)
              AS chi2
     FROM contrib, tot GROUP BY v, n1, n2
-    """.format(d=sql_dsum12("x")),
+    """.format(d=sql_exact_sum("x", scale=12)),
     doc="Chi-square drift between the word distributions of two corpus "
         "slices (source src1 observed vs src2 reference), additive-0.5 "
         "smoothing over the union vocabulary — the RATIONAL member of "
@@ -509,7 +509,7 @@ def chi2_drift_docs(
     )
     return contrib.groupBy("v", "n1", "n2").agg(
         F.round(
-            dsum12(F.col("x")), 9
+            exact_sum(F.col("x"), scale=12), 9
         ).alias("chi2")
     ).select(
         F.col("v").cast("bigint").alias("n_terms"),
@@ -1644,7 +1644,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                                1 - sg / sqrt(CAST(n1 * n2 AS DOUBLE)))), 9)
              AS hellinger
     FROM agg WHERE n_terms > 0
-    """.format(d=sql_dsum12("sqrt(CAST(ca * cb AS DOUBLE))")),
+    """.format(d=sql_exact_sum("sqrt(CAST(ca * cb AS DOUBLE))", scale=12)),
     doc="Hellinger drift between the word distributions of two corpus "
         "slices (src1 vs src2) — the bounded-[0,1] member of the drift "
         "family (tvd: L1; ks: sup-CDF; chi2: variance-weighted L2; "
@@ -1695,8 +1695,8 @@ def hellinger_drift_docs(
         F.sum("ca").cast("bigint").alias("n1"),
         F.sum("cb").cast("bigint").alias("n2"),
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-        dsum12(
-            F.sqrt((F.col("ca") * F.col("cb")).cast("double"))
+        exact_sum(
+            F.sqrt((F.col("ca") * F.col("cb")).cast("double")), scale=12
         ).alias("sg"),
     ).filter(F.col("n_terms") > 0)  # empty corpus => empty result
     bc = F.col("sg") / F.sqrt((F.col("n1") * F.col("n2")).cast("double"))

@@ -11,12 +11,13 @@ Cross-engine determinism rules (so order-insensitive value hashes match):
 - Money/measure sums go through exact integer arithmetic: each value is
   quantized to DECIMAL(18,6), scaled to an exact BIGINT of micro-units,
   summed as integers, then converted by ONE int->double conversion and
-  ONE IEEE division (``dsum``/``sql_dsum``). Per-row double expressions
-  are IEEE-identical across engines; integer sums are order-independent;
-  int->double and double division are IEEE-defined identically in both
-  engines. (The pre-round-12 ``CAST(SUM(decimal) AS DOUBLE)`` form
-  diverged by 1 ulp once |sum| > 2^33: the engines implement
-  decimal->double differently — caught by the local sf1 fixture.)
+  ONE IEEE division (``exact_sum``/``sql_exact_sum``). Per-row double
+  expressions are IEEE-identical across engines; integer sums are
+  order-independent; int->double and double division are IEEE-defined
+  identically in both engines. (The pre-round-12 ``CAST(SUM(decimal)
+  AS DOUBLE)`` form diverged by 1 ulp once |sum| > 2^33: the engines
+  implement decimal->double differently — caught by the local sf1
+  fixture.)
 - Averages are the same micro-unit sum /1e6 /count in double.
 - Every computed column is explicitly aliased, identically in both the
   Spark plan and the oracle SQL (driver compares by sorted column name).
@@ -58,11 +59,9 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-#: exact-decimal accumulator type used for cross-engine-stable sums
-DEC = "decimal(18,6)"
 
 
 @dataclass
@@ -543,257 +542,84 @@ def all_queries() -> dict[str, Query]:
     return ordered
 
 
-def dsum(col: Column) -> Column:
-    """Order-independent sum of a double expression, DOUBLE result that
-    is bit-reproducible across engines at ANY scale factor: each value
-    is cast to DECIMAL(18,6) (exact 6-dp quantum), scaled to an exact
-    BIGINT of micro-units, summed as integers, then converted through
-    ONE int->double conversion and ONE IEEE division — both defined
-    identically by Spark and DuckDB.
+#: per-row quantize casts keyed by scale: (Spark cast, SQL widen before
+#: the multiply). These casts set the result bits; DuckDB's decimal
+#: multiply keeps the input width, so the SQL side widens first.
+_QUANTUM = {
+    6: ("decimal(18,6)", "DECIMAL(30,6)"),
+    9: ("decimal(22,9)", "DECIMAL(38,9)"),
+    12: ("decimal(24,12)", "DECIMAL(38,12)"),
+}
 
-    Why not ``CAST(SUM(decimal) AS DOUBLE)`` (the pre-round-12 form):
-    the two engines implement decimal->double differently (DuckDB goes
-    hugeint->double THEN divides by 10^scale — two roundings; Spark's
-    BigDecimal.doubleValue() rounds once), which diverges by 1 ulp as
-    soon as |sum| is large enough that a double ulp exceeds the 1e-6
-    quantum (|sum| > 2^33) — surfaced by the round-12 local sf1 fixture
-    on TPC-H Q1's sum_charge.
 
-    Round 13 (r12 ADVICE): the accumulator must not silently WRAP past
-    2^63 micro-units the way the r12 LongType SUM did (Spark's
-    non-ANSI long SUM wraps; it does not null — the pre-r13 docstring
-    was wrong).
+def _check_exact_sum(scale: int, over: object, mean: bool) -> None:
+    shaped = over is not None or mean
+    if scale not in _QUANTUM or shaped and scale != 6 or over is not None and mean:
+        raise ValueError(
+            f"unsupported exact sum: scale={scale}, over={over!r}, mean={mean}"
+        )
 
-    Round-13 OPTIMIZATION (guide §1.2 "per-task work"): the first r13
-    fix summed DECIMAL(38,0) per row, which drops the aggregation out
-    of the native long fast path into per-row BigDecimal adds —
-    measured 1.8-2.5x slower on the TPC-H shapes (q1 4-column agg
-    2.20s vs 1.23s at sf0.1). The exact 128-bit total is instead
-    reconstructed from native long sums of a digit decomposition of
-    each micros value m — floor shifts and low-bits masks, exact for
-    negatives in two's complement — summed as plain longs
-    (whole-stage-codegen native). The group-level reconstruction
-    runs on DECIMAL(38,0) (one op per GROUP, not per row), so the
-    integer total — and therefore the ONE int->double conversion and
-    ONE IEEE division — is bit-identical to both the r12 long form
-    and the DECIMAL(38,0) form (probed: 0 diffs on the sf0.1 per-key
-    and negative-mix shapes). Per-row domain is bounded by the
-    DECIMAL(18,6) input cast itself (|value| < 1e12).
 
-    Round-14 (r13 verdict item 2 — scale safety): the r13 form split
-    m into TWO components and guarded with COUNT < 4e9 +
-    ``raise_error`` — which ABORTS exactly the jobs the engine is
-    for (a 100 TB global sum is ~1e12 rows). The split is now FOUR
-    components (three 16-bit unsigned digits + the signed high part),
-    which removes the guard entirely: sum(digit) <= N*(2^16-1) and
-    sum|hi| <= N*ceil(1e18/2^48) = N*3553, so no component can wrap a
-    signed 64-bit accumulator until a single group holds N >= 2^63 /
-    (2^16-1) ~= 1.4e14 rows — beyond 10 PB in ONE group at 100-byte
-    rows, >1000x past the 100 TB design point (document, don't
-    guard: the r13 raise path fired at realistic scale; the wide
-    residual risk is off the design envelope, and a deployment past
-    it swaps in the DECIMAL(38,0)-per-row accumulator form). Four
-    codegen'd long sums replace two sums + one count: same aggregate
-    buffer count as the guarded form, no conditional, no raise in
-    the plan."""
-    m = (col.cast(DEC) * F.lit(1_000_000)).cast("long")
-    mask = F.lit(65535)
-    s0 = F.sum(m.bitwiseAND(mask))
-    s1 = F.sum(F.shiftright(m, 16).bitwiseAND(mask))
-    s2 = F.sum(F.shiftright(m, 32).bitwiseAND(mask))
-    s3 = F.sum(F.shiftright(m, 48))
-    micros = (
-        s3.cast("decimal(38,0)") * F.lit(281_474_976_710_656)
-        + s2.cast("decimal(38,0)") * F.lit(4_294_967_296)
-        + s1.cast("decimal(38,0)") * F.lit(65_536)
-        + s0.cast("decimal(38,0)")
+def exact_sum(
+    col: Column, scale: int = 6, over: WindowSpec | None = None, mean: bool = False
+) -> Column:
+    """Order-independent sum (``mean=True``: sum / COUNT(col)) of a
+    double expression, as a DOUBLE bit-identical to :func:`sql_exact_sum`
+    on DuckDB at any scale factor. Each value is quantized to ``scale``
+    decimal places and scaled to an exact integer of 10^-scale units;
+    the integer total passes ONE int->double conversion and ONE IEEE
+    division. Scale 6 is for money and measures, 9 for irrational sums
+    reported raw, 12 for sub-unit scores reported at fixed precision.
+    Per-row domain at every scale: |value| < 1e12 (the quantize casts).
+
+    Accumulator rule: a grouped or global aggregate at scale 6 sums four
+    16-bit digits of each micros value as native longs (codegen'd, no
+    guard) and rebuilds the exact total per group on DECIMAL(38,0); no
+    digit sum wraps until one group holds 2^63/(2^16-1) ~= 1.4e14 rows.
+    Scales 9 and 12 and every windowed form (``over=`` a WindowSpec) sum
+    per-row DECIMAL(38,0) units. Unused combinations raise ValueError.
+    Derivation: OPTIMIZATION_r14.md "Exact sums"."""
+    _check_exact_sum(scale, over, mean)
+    units = col.cast(_QUANTUM[scale][0]) * F.lit(10**scale)
+    if scale == 6:
+        units = units.cast("long")  # |micros| < 1e18 fits a long
+    if scale == 6 and over is None:
+        mask = F.lit(65535)
+        s0 = F.sum(units.bitwiseAND(mask))
+        s1 = F.sum(F.shiftright(units, 16).bitwiseAND(mask))
+        s2 = F.sum(F.shiftright(units, 32).bitwiseAND(mask))
+        s3 = F.sum(F.shiftright(units, 48))
+        total = (
+            s3.cast("decimal(38,0)") * F.lit(2**48)
+            + s2.cast("decimal(38,0)") * F.lit(2**32)
+            + s1.cast("decimal(38,0)") * F.lit(2**16)
+            + s0.cast("decimal(38,0)")
+        )
+    else:
+        total = F.sum(units.cast("decimal(38,0)"))
+        if over is not None:
+            total = total.over(over)
+    out = total.cast("double") / F.lit(float(10**scale))
+    if mean:
+        out = out / F.count(col)
+    return out.cast("double")
+
+
+def sql_exact_sum(
+    expr: str, scale: int = 6, over: str | None = None, mean: bool = False
+) -> str:
+    """SQL twin of :func:`exact_sum`: the same quantize, an exact
+    DECIMAL(38,0) sum and one int->double conversion, spelled so the same
+    text runs on DuckDB (the oracle) and on Spark SQL with bit-identical
+    results. ``over`` is a literal window clause such as ``"OVER w"``."""
+    _check_exact_sum(scale, over, mean)
+    cast, widen = _QUANTUM[scale]
+    units = (
+        f"SUM(CAST(CAST(CAST({expr} AS {cast.upper()}) AS {widen})"
+        f" * {10**scale} AS DECIMAL(38,0)))"
     )
-    return (micros.cast("double") / F.lit(1_000_000.0)).cast("double")
-
-
-def davg(col: Column) -> Column:
-    """Order-independent mean: exact micro-unit integer sum, then
-    int->double, /1e6, /count — the identical IEEE op sequence in both
-    engines (see :func:`dsum` for why decimal->double casts can't
-    appear anywhere on this path, and for the r14 guard-free split:
-    four native long digit sums reconstructed to the exact
-    DECIMAL(38,0) total per group — wrap-free to ~1.4e14 rows per
-    group, no raise path)."""
-    m = (col.cast(DEC) * F.lit(1_000_000)).cast("long")
-    mask = F.lit(65535)
-    s0 = F.sum(m.bitwiseAND(mask))
-    s1 = F.sum(F.shiftright(m, 16).bitwiseAND(mask))
-    s2 = F.sum(F.shiftright(m, 32).bitwiseAND(mask))
-    s3 = F.sum(F.shiftright(m, 48))
-    micros = (
-        s3.cast("decimal(38,0)") * F.lit(281_474_976_710_656)
-        + s2.cast("decimal(38,0)") * F.lit(4_294_967_296)
-        + s1.cast("decimal(38,0)") * F.lit(65_536)
-        + s0.cast("decimal(38,0)")
-    )
-    return (
-        micros.cast("double") / F.lit(1_000_000.0) / F.count(col)
-    ).cast("double")
-
-
-def sql_dsum(expr: str) -> str:
-    """DuckDB oracle twin of :func:`dsum` — same op sequence, same
-    roundings: per-row DECIMAL(18,6) quantize, exact micro-unit sum on
-    a 128-bit accumulator (DuckDB widens integer SUM to HUGEINT; the
-    explicit HUGEINT cast — r13, was BIGINT — keeps the exact domain
-    and the loud-overflow behavior aligned with dsum's decimal(38,0)
-    accumulator; hugeint->double and BigDecimal.doubleValue are both
-    correctly rounded, probed bit-equal), one division."""
-    micros = (
-        # the DECIMAL(30,6) widen matters: DuckDB's decimal multiply
-        # keeps the input width, so DECIMAL(18,6) * 1000000 overflows
-        # on per-row values >= 1e6 (surfaced by q11's price*qty at the
-        # r12 gate); Spark widens automatically
-        f"CAST(SUM(CAST(CAST(CAST({expr} AS DECIMAL(18,6)) "
-        f"AS DECIMAL(30,6)) * 1000000 AS BIGINT)) AS HUGEINT)"
-    )
-    return f"(CAST({micros} AS DOUBLE) / 1000000.0)"
-
-
-def sql_davg(expr: str) -> str:
-    """DuckDB oracle twin of :func:`davg`."""
-    micros = (
-        # the DECIMAL(30,6) widen matters: DuckDB's decimal multiply
-        # keeps the input width, so DECIMAL(18,6) * 1000000 overflows
-        # on per-row values >= 1e6 (surfaced by q11's price*qty at the
-        # r12 gate); Spark widens automatically
-        f"CAST(SUM(CAST(CAST(CAST({expr} AS DECIMAL(18,6)) "
-        f"AS DECIMAL(30,6)) * 1000000 AS BIGINT)) AS HUGEINT)"
-    )
-    return (
-        f"CAST(CAST({micros} AS DOUBLE) / 1000000.0 "
-        f"/ COUNT({expr}) AS DOUBLE)"
-    )
-
-
-DEC12 = "decimal(24,12)"
-
-
-def dsum12(col: Column) -> Column:
-    """12-dp-quantum sibling of :func:`dsum` for SUB-UNIT magnitudes
-    (probabilities, log-ratios, cosine scores, per-token weights):
-    each value is quantized to an exact DECIMAL(24,12) (1e-12 quantum),
-    scaled to exact BIGINT pico-units, summed on a 128-bit
-    DECIMAL(38,0) accumulator, then converted through ONE int->double
-    conversion and ONE IEEE division — identical in both engines.
-
-    Why it exists (round 13, r12 verdict item 1): the old inline form
-    ``SUM(x::DECIMAL(28,12))::DOUBLE`` hits the
-    decimal->double double-rounding divergence as soon as a double ulp
-    exceeds the 1e-12 quantum — |sum| > ~2^12 (4096), which data-scaled
-    score sums cross near sf1. Per-row pico-units ride DECIMAL(38,12)
-    -> DECIMAL(38,0) directly (no int64 hop), so the per-row domain is
-    |value| < 1e12 — wide enough for TF-IDF w*w terms whose rare-term
-    IDF odds scale with corpus size; total |sum| exact to ~1e26."""
-    picos = F.sum(
-        # (24,12) * (13,0) widens to exactly (38,12) in Spark — no
-        # precision-cap rescale, so the product is exact; the
-        # DECIMAL(38,0) cast of the integral pico value is exact
-        (col.cast(DEC12) * F.lit(1_000_000_000_000)).cast("decimal(38,0)")
-    )
-    return (
-        picos.cast("double") / F.lit(1_000_000_000_000.0)
-    ).cast("double")
-
-
-def sql_dsum12(expr: str) -> str:
-    """DuckDB oracle twin of :func:`dsum12` — same op sequence, same
-    roundings. The DECIMAL(38,12) widen before the multiply is
-    required because DuckDB's decimal multiply keeps the input width;
-    the integral pico product then casts exactly to DECIMAL(38,0),
-    whose SUM stays int128-exact (same accumulator as Spark's
-    DECIMAL(38,0) sum)."""
-    picos = (
-        f"CAST(SUM(CAST(CAST(CAST({expr} AS DECIMAL(24,12)) "
-        f"AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) "
-        f"AS DECIMAL(38,0))"
-    )
-    return f"(CAST({picos} AS DOUBLE) / 1000000000000.0)"
-
-
-def sql_dsum_shared(expr: str) -> str:
-    """Dialect-NEUTRAL micros form of :func:`dsum` — the same string
-    runs on Spark SQL and DuckDB with bit-identical results, for
-    queries whose Spark side is ``spark.sql(...)`` text (the SQL-API
-    surface). Spark has no HUGEINT keyword, so the 128-bit accumulator
-    is spelled ``SUM(CAST(... AS DECIMAL(38,0)))`` — both engines sum
-    DECIMAL(38,0) exactly (128-bit), and the final decimal->double
-    conversion of an INTEGER-valued decimal is the same correctly-
-    rounded int->double sql_dsum performs (probed equal to the HUGEINT
-    path). The DECIMAL(30,6) widen before the multiply is required by
-    DuckDB (keeps width) and harmless in Spark (widens automatically);
-    the multiply result is integral (6-dp input * 1e6), so the
-    DECIMAL(38,0) cast is exact."""
-    micros = (
-        f"SUM(CAST(CAST(CAST({expr} AS DECIMAL(18,6)) AS DECIMAL(30,6))"
-        f" * 1000000 AS DECIMAL(38,0)))"
-    )
-    return f"(CAST({micros} AS DOUBLE) / 1000000.0)"
-
-
-def dsum_win(col: Column, w) -> Column:
-    """Windowed :func:`dsum`: the same exact micro-unit pipeline under
-    an analytic frame. The accumulator must be DECIMAL(38,0) (not
-    LONG) for the same wrap-vs-exact reason as dsum, and the micros
-    column is built per-row BEFORE the window so the frame sums exact
-    integers."""
-    micros = (col.cast(DEC) * F.lit(1_000_000)).cast("long").cast(
-        "decimal(38,0)"
-    )
-    return (
-        F.sum(micros).over(w).cast("double") / F.lit(1_000_000.0)
-    ).cast("double")
-
-
-def sql_dsum_over(expr: str, over: str) -> str:
-    """Oracle twin of :func:`dsum_win` — dialect-neutral (DECIMAL(38,0)
-    accumulator; DuckDB window SUM over DECIMAL(38,0) stays 128-bit
-    exact, same as Spark). ``over`` is the literal window clause, e.g.
-    ``"OVER w"`` or ``"OVER (PARTITION BY k ORDER BY t)"``."""
-    micros = (
-        f"SUM(CAST(CAST(CAST({expr} AS DECIMAL(18,6)) AS DECIMAL(30,6))"
-        f" * 1000000 AS DECIMAL(38,0))) {over}"
-    )
-    return f"(CAST({micros} AS DOUBLE) / 1000000.0)"
-
-
-DEC9 = "decimal(22,9)"
-
-
-def dsum9(col: Column) -> Column:
-    """9-dp-quantum sibling of :func:`dsum` for IRRATIONAL-valued sums
-    reported RAW (sqrt norms, unrounded score sums): nano-units on the
-    128-bit accumulator, ONE int->double conversion.
-
-    Why 9 dp and not 12 (round 13, found by the sf1 sweep on
-    q_embedding_profile's norm_sum): the per-row double->decimal cast
-    itself is engine-divergent at a rate set by the quantum — Spark
-    quantizes the SHORTEST decimal repr (BigDecimal.valueOf) while
-    DuckDB rounds the exact binary value, and the two disagree when
-    the repr's digits at the quantum boundary sit on a rounding tie —
-    ~1e-4 per row at 12 dp (digit 13 of a ~17-digit repr) but ~1e-8 at
-    9 dp. Raw-reported sums need the 9-dp quantum; 12-dp is for
-    rational scores under fixed-precision (ROUND 9) reporting, where
-    the rare per-row flip is absorbed."""
-    nanos = F.sum(
-        (col.cast(DEC9) * F.lit(1_000_000_000)).cast("decimal(38,0)")
-    )
-    return (
-        nanos.cast("double") / F.lit(1_000_000_000.0)
-    ).cast("double")
-
-
-def sql_dsum9(expr: str) -> str:
-    """DuckDB oracle twin of :func:`dsum9` (see sql_dsum12 for the
-    widen + 128-bit accumulator notes)."""
-    nanos = (
-        f"CAST(SUM(CAST(CAST(CAST({expr} AS DECIMAL(22,9)) "
-        f"AS DECIMAL(38,9)) * 1000000000 AS DECIMAL(38,0))) "
-        f"AS DECIMAL(38,0))"
-    )
-    return f"(CAST({nanos} AS DOUBLE) / 1000000000.0)"
+    if over is not None:
+        units += f" {over}"
+    if mean:
+        return f"CAST(CAST({units} AS DOUBLE) / {10**scale}.0 / COUNT({expr}) AS DOUBLE)"
+    return f"(CAST({units} AS DOUBLE) / {10**scale}.0)"

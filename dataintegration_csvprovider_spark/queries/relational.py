@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import davg, dsum, dsum_win, register, sql_davg, sql_dsum, sql_dsum_over
+from .registry import exact_sum, register, sql_exact_sum
 
 # --------------------------------------------------------------------------
 # Flagship: TPC-H Q1-style pricing summary (scan -> filter -> agg -> sort).
@@ -24,13 +24,13 @@ from .registry import davg, dsum, dsum_win, register, sql_davg, sql_dsum, sql_ds
     "q1_pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           {sql_dsum('l_quantity')} AS sum_qty,
-           {sql_dsum('l_extendedprice')} AS sum_base_price,
-           {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-           {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-           {sql_davg('l_quantity')} AS avg_qty,
-           {sql_davg('l_extendedprice')} AS avg_price,
-           {sql_davg('l_discount')} AS avg_disc,
+           {sql_exact_sum('l_quantity')} AS sum_qty,
+           {sql_exact_sum('l_extendedprice')} AS sum_base_price,
+           {sql_exact_sum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {sql_exact_sum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+           {sql_exact_sum('l_quantity', mean=True)} AS avg_qty,
+           {sql_exact_sum('l_extendedprice', mean=True)} AS avg_price,
+           {sql_exact_sum('l_discount', mean=True)} AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -48,13 +48,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            dsum(F.col("l_quantity")).alias("sum_qty"),
-            dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            dsum(disc_price).alias("sum_disc_price"),
-            dsum(charge).alias("sum_charge"),
-            davg(F.col("l_quantity")).alias("avg_qty"),
-            davg(F.col("l_extendedprice")).alias("avg_price"),
-            davg(F.col("l_discount")).alias("avg_disc"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+            exact_sum(disc_price).alias("sum_disc_price"),
+            exact_sum(charge).alias("sum_charge"),
+            exact_sum(F.col("l_quantity"), mean=True).alias("avg_qty"),
+            exact_sum(F.col("l_extendedprice"), mean=True).alias("avg_price"),
+            exact_sum(F.col("l_discount"), mean=True).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -72,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT c.c_mktsegment,
            n.n_name,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            COUNT(*) AS n_items
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -94,7 +94,7 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_mktsegment", "n_name")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -106,7 +106,7 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.c_custkey,
            c.c_name,
            COUNT(o.o_orderkey) AS n_orders,
-           {sql_dsum('o.o_totalprice')} AS total_spent
+           {sql_exact_sum('o.o_totalprice')} AS total_spent
     FROM customer c
     LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey, c.c_name
@@ -122,7 +122,7 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_name")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            dsum(F.col("o_totalprice")).alias("total_spent"),
+            exact_sum(F.col("o_totalprice")).alias("total_spent"),
         )
     )
 
@@ -152,7 +152,7 @@ def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH big AS (
       SELECT o_custkey, COUNT(*) AS n_big,
-             {sql_dsum('o_totalprice')} AS big_total
+             {sql_exact_sum('o_totalprice')} AS big_total
       FROM orders WHERE o_totalprice > 250000 GROUP BY o_custkey
     )
     SELECT c.c_custkey, c.c_acctbal, b.n_big, b.big_total
@@ -170,7 +170,7 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_big"),
-            dsum(F.col("o_totalprice")).alias("big_total"),
+            exact_sum(F.col("o_totalprice")).alias("big_total"),
         )
     )
     return cust.join(big, cust.c_custkey == big.o_custkey, "full").select(
@@ -224,7 +224,7 @@ def q_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT b.band,
            COUNT(*) AS n_items,
-           {sql_dsum('l.l_extendedprice')} AS band_price
+           {sql_exact_sum('l.l_extendedprice')} AS band_price
     FROM lineitem l
     JOIN (VALUES ('low', 0.0, 10.0), ('mid', 10.0, 25.0), ('high', 25.0, 1e9))
          AS b(band, lo, hi)
@@ -246,7 +246,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            dsum(F.col("l_extendedprice")).alias("band_price"),
+            exact_sum(F.col("l_extendedprice")).alias("band_price"),
         )
     )
 
@@ -264,8 +264,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT o_custkey) AS n_customers,
            CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
            CAST(MAX(o_totalprice) AS DOUBLE) AS max_price,
-           {sql_dsum('o_totalprice')} AS sum_price,
-           {sql_davg('o_totalprice')} AS avg_price
+           {sql_exact_sum('o_totalprice')} AS sum_price,
+           {sql_exact_sum('o_totalprice', mean=True)} AS avg_price
     FROM orders
     GROUP BY o_orderpriority
     """,
@@ -279,8 +279,8 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("o_custkey").alias("n_customers"),
         F.min("o_totalprice").cast("double").alias("min_price"),
         F.max("o_totalprice").cast("double").alias("max_price"),
-        dsum(F.col("o_totalprice")).alias("sum_price"),
-        davg(F.col("o_totalprice")).alias("avg_price"),
+        exact_sum(F.col("o_totalprice")).alias("sum_price"),
+        exact_sum(F.col("o_totalprice"), mean=True).alias("avg_price"),
     )
 
 
@@ -325,7 +325,7 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
            CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
            COUNT(*) AS n_rows,
-           {sql_dsum('l_quantity')} AS sum_qty
+           {sql_exact_sum('l_quantity')} AS sum_qty
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
@@ -338,7 +338,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("l_returnflag").cast("int").alias("g_rf"),
         F.grouping("l_linestatus").cast("int").alias("g_ls"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum(F.col("l_quantity")).alias("sum_qty"),
+        exact_sum(F.col("l_quantity")).alias("sum_qty"),
     )
 
 
@@ -349,7 +349,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
            CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
            COUNT(*) AS n_rows,
-           {sql_dsum('l_extendedprice')} AS sum_price
+           {sql_exact_sum('l_extendedprice')} AS sum_price
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
@@ -362,7 +362,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("l_returnflag").cast("int").alias("g_rf"),
         F.grouping("l_linestatus").cast("int").alias("g_ls"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum(F.col("l_extendedprice")).alias("sum_price"),
+        exact_sum(F.col("l_extendedprice")).alias("sum_price"),
     )
 
 
@@ -370,8 +370,8 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pivot",
     oracle=f"""
     SELECT l_returnflag,
-           {sql_dsum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_O,
-           {sql_dsum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_F
+           {sql_exact_sum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_O,
+           {sql_exact_sum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_F
     FROM lineitem
     GROUP BY l_returnflag
     """,
@@ -383,7 +383,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     piv = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(dsum(F.col("l_quantity")))
+        .agg(exact_sum(F.col("l_quantity")))
     )
     return piv.select(
         "l_returnflag",
@@ -437,7 +437,7 @@ _RUNNING_W = (
     # micros form.
     oracle=f"""
     SELECT o_custkey, o_orderkey,
-           {sql_dsum_over("o_totalprice", _RUNNING_W)}
+           {sql_exact_sum("o_totalprice", over=_RUNNING_W)}
              AS running_spend
     FROM orders
     """,
@@ -454,7 +454,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        dsum_win(F.col("o_totalprice"), w).alias("running_spend"),
+        exact_sum(F.col("o_totalprice"), over=w).alias("running_spend"),
     )
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.asof import asof_join
 from ..operators.sessions import session_stats
-from .registry import davg, dsum, register, sql_davg, sql_dsum, sql_dsum_shared
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -20,17 +20,17 @@ from .registry import davg, dsum, register, sql_davg, sql_dsum, sql_dsum_shared
     SELECT o_orderkey, o_totalprice
     FROM orders
     WHERE o_totalprice > (
-      SELECT {sql_davg('o_totalprice')}
+      SELECT {sql_exact_sum('o_totalprice', mean=True)}
       FROM orders)
     """,
     doc="Scalar subquery: orders above the mean price (micros-form mean "
-        "— see dsum — so both engines compare against identical bits at "
+        "— see exact_sum — so both engines compare against identical bits at "
         "ANY scale factor, the order-count sum crossing 2^33 included).",
     tags=("subquery",),
 )
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    thr = orders.agg(davg(F.col("o_totalprice")).alias("thr"))
+    thr = orders.agg(exact_sum(F.col("o_totalprice"), mean=True).alias("thr"))
     return (
         orders.crossJoin(F.broadcast(thr))
         .filter(F.col("o_totalprice") > F.col("thr"))
@@ -205,7 +205,7 @@ def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, l_linestatus,
            CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
            CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-           COUNT(*) AS n, {sql_dsum('l_quantity')} AS sum_qty
+           COUNT(*) AS n, {sql_exact_sum('l_quantity')} AS sum_qty
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """,
@@ -215,17 +215,15 @@ def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("lineitem")
-    # sql_dsum_shared, not sql_dsum: this SQL text runs through SPARK,
-    # which has no HUGEINT keyword (r13 — the HUGEINT accumulator
-    # upgrade surfaced the dialect dependence); the shared DECIMAL(38,0)
-    # form is probed bit-equal to the oracle's HUGEINT path
+    # this SQL text runs through SPARK; sql_exact_sum's DECIMAL(38,0)
+    # spelling is dialect-neutral (Spark has no HUGEINT keyword)
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
                CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
                CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
                COUNT(*) AS n,
-               {sql_dsum_shared('l_quantity')} AS sum_qty
+               {sql_exact_sum('l_quantity')} AS sum_qty
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """
@@ -306,9 +304,9 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(ts) AS session_start,
            MAX(ts) + INTERVAL 30 MINUTE AS session_end,
            COUNT(*) AS n_events,
-           {dsum_v} AS total
+           {sum_v} AS total
     FROM sessions GROUP BY user_id, sid
-    """.format(dsum_v=sql_dsum("value")),
+    """.format(sum_v=sql_exact_sum("value")),
     doc="Batch sessionization (gaps-and-islands windows) matching the "
         "streaming session_window contract.",
     tags=("window", "session"),
@@ -331,11 +329,11 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
            event_type,
            COUNT(*) AS n,
-           {dsum_v} AS total,
+           {sum_v} AS total,
            COUNT(DISTINCT user_id) AS n_users
     FROM events
     GROUP BY 1, 2
-    """.format(dsum_v=sql_dsum("value")),
+    """.format(sum_v=sql_exact_sum("value")),
     doc="Event-stream rollup: hourly counts/sums/actives per type (batch "
         "twin of the streaming tumbling agg).",
     tags=("agg", "events"),
@@ -346,7 +344,7 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(F.col("value")).alias("total"),
+        exact_sum(F.col("value")).alias("total"),
         F.countDistinct("user_id").alias("n_users"),
     )
 

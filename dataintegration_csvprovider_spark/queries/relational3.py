@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -165,11 +165,11 @@ def q_argmax_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_conditional_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            COUNT(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
            COUNT(*) FILTER (WHERE l_tax = 0) AS n_taxfree,
-           (CAST(CAST(SUM(CAST(CAST(CAST(CASE WHEN l_quantity > 25 THEN l_extendedprice END AS DECIMAL(18,6)) AS DECIMAL(30,6)) * 1000000 AS BIGINT)) AS HUGEINT) AS DOUBLE) / 1000000.0) AS bulk_revenue
+           {sql_exact_sum("CASE WHEN l_quantity > 25 THEN l_extendedprice END")} AS bulk_revenue
     FROM lineitem
     GROUP BY l_returnflag
     """,
@@ -181,7 +181,7 @@ def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag").agg(
         F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
         F.count_if(F.col("l_tax") == 0).alias("n_taxfree"),
-        dsum(
+        exact_sum(
             F.when(F.col("l_quantity") > 25, F.col("l_extendedprice"))
         ).alias("bulk_revenue"),
     )

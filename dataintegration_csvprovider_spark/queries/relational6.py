@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
-from .registry import register, dsum, dsum_win, sql_dsum, sql_dsum_over
+from .registry import register, exact_sum, sql_exact_sum
 
 
 @register(
@@ -22,7 +22,7 @@ from .registry import register, dsum, dsum_win, sql_dsum, sql_dsum_over
     oracle=f"""
     SELECT n.n_nationkey, n.n_name,
            COUNT(*) AS n_cust,
-           {sql_dsum('c.c_acctbal')} AS total_bal
+           {sql_exact_sum('c.c_acctbal')} AS total_bal
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY n.n_nationkey, n.n_name
     HAVING COUNT(*) >= 5 AND EXISTS (
@@ -43,7 +43,7 @@ def q_having_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_nationkey", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_cust"),
-            dsum(F.col("c_acctbal")).alias("total_bal"),
+            exact_sum(F.col("c_acctbal")).alias("total_bal"),
         )
         .filter(F.col("n_cust") >= 5)
     )
@@ -57,7 +57,7 @@ def q_having_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ntile",
     oracle=f"""
     SELECT CAST(q AS INT) AS quartile, COUNT(*) AS n,
-           {sql_dsum('c_acctbal')} AS total_bal
+           {sql_exact_sum('c_acctbal')} AS total_bal
     FROM (SELECT c_acctbal,
                  NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS q
           FROM customer) t
@@ -77,7 +77,7 @@ def q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("q").cast("int").alias("quartile"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            dsum(F.col("c_acctbal")).alias("total_bal"),
+            exact_sum(F.col("c_acctbal")).alias("total_bal"),
         )
     )
 
@@ -121,11 +121,11 @@ def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT l_returnflag,
              COUNT(*) AS n,
-             {sql_dsum("l_quantity")} AS sx,
-             {sql_dsum("l_extendedprice")} AS sy,
-             {sql_dsum("l_quantity * l_extendedprice")} AS sxy,
-             {sql_dsum("l_quantity * l_quantity")} AS sxx,
-             {sql_dsum("l_extendedprice * l_extendedprice")} AS syy
+             {sql_exact_sum("l_quantity")} AS sx,
+             {sql_exact_sum("l_extendedprice")} AS sy,
+             {sql_exact_sum("l_quantity * l_extendedprice")} AS sxy,
+             {sql_exact_sum("l_quantity * l_quantity")} AS sxx,
+             {sql_exact_sum("l_extendedprice * l_extendedprice")} AS syy
       FROM lineitem GROUP BY l_returnflag)
     SELECT l_returnflag, n,
            ROUND(CAST((n * sxy - sx * sy)
@@ -149,11 +149,11 @@ def q_corr_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(x).alias("sx"),
-        dsum(y).alias("sy"),
-        dsum(x * y).alias("sxy"),
-        dsum(x * x).alias("sxx"),
-        dsum(y * y).alias("syy"),
+        exact_sum(x).alias("sx"),
+        exact_sum(y).alias("sy"),
+        exact_sum(x * y).alias("sxy"),
+        exact_sum(x * x).alias("sxx"),
+        exact_sum(y * y).alias("syy"),
     )
     n = F.col("n")
     corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -309,7 +309,7 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_histogram",
     oracle=f"""
     SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS bucket,
-           COUNT(*) AS n, {sql_dsum('o_totalprice')} AS total
+           COUNT(*) AS n, {sql_exact_sum('o_totalprice')} AS total
     FROM orders GROUP BY 1
     """,
     doc="Fixed-width histogram by integer bucketing — one shuffle on the "
@@ -321,7 +321,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.floor(F.col("o_totalprice") / 50000).cast("bigint")
     return orders.groupBy(bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(F.col("o_totalprice")).alias("total"),
+        exact_sum(F.col("o_totalprice")).alias("total"),
     )
 
 
@@ -329,7 +329,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_salted_join",
     oracle=f"""
     SELECT o.o_orderpriority, COUNT(*) AS n_items,
-           {sql_dsum('l.l_extendedprice')} AS total_price
+           {sql_exact_sum('l.l_extendedprice')} AS total_price
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
@@ -349,7 +349,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(li, orders, on="o_orderkey", salt_buckets=8)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
-        dsum(F.col("l_extendedprice")).alias("total_price"),
+        exact_sum(F.col("l_extendedprice")).alias("total_price"),
     )
 
 
@@ -361,7 +361,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_id, user_id,
            CAST(COUNT(*) OVER w AS BIGINT) AS n_prev_1h,
-           {sql_dsum_over("value", "OVER w")} AS sum_prev_1h
+           {sql_exact_sum("value", over="OVER w")} AS sum_prev_1h
     FROM events
     WHERE user_id < 20
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
@@ -385,7 +385,7 @@ def q_trailing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.count(F.lit(1)).over(w).alias("n_prev_1h"),
-        dsum_win(F.col("value"), w).alias("sum_prev_1h"),
+        exact_sum(F.col("value"), over=w).alias("sum_prev_1h"),
     )
 
 
@@ -393,7 +393,7 @@ def q_trailing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bucketed_join",
     oracle=f"""
     SELECT o.o_orderstatus, COUNT(*) AS n_items,
-           {sql_dsum('l.l_quantity')} AS total_qty
+           {sql_exact_sum('l.l_quantity')} AS total_qty
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderstatus
     """,
@@ -427,7 +427,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = bucketed_join(spark, "gate_li_bkt", "gate_ord_bkt", ["l_orderkey"])
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_items"),
-        dsum(F.col("l_quantity")).alias("total_qty"),
+        exact_sum(F.col("l_quantity")).alias("total_qty"),
     )
 
 
@@ -513,7 +513,7 @@ def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH agg AS (
       SELECT o.o_orderstatus, COUNT(*) AS n_items,
-             {sql_dsum('l.l_extendedprice')} AS total_price
+             {sql_exact_sum('l.l_extendedprice')} AS total_price
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       GROUP BY o.o_orderstatus
     )
@@ -549,7 +549,7 @@ def q_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
-                dsum(F.col("l_extendedprice")).alias("total_price"),
+                exact_sum(F.col("l_extendedprice")).alias("total_price"),
             )
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
@@ -601,10 +601,10 @@ def q_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
                              (SELECT h FROM hb ORDER BY h LIMIT 64))
                   END AS est FROM hb),
     ja AS (SELECT COUNT(*) AS n_rows,
-                  {sql_dsum('o.o_totalprice')} AS total_price
+                  {sql_exact_sum('o.o_totalprice')} AS total_price
            FROM orders o JOIN dim_a d ON o.o_custkey = d.c_custkey),
     jb AS (SELECT COUNT(*) AS n_rows,
-                  {sql_dsum('o.o_totalprice')} AS total_price
+                  {sql_exact_sum('o.o_totalprice')} AS total_price
            FROM orders o JOIN dim_b d ON o.o_custkey = d.c_custkey)
     SELECT 'hot_building' AS which,
            ROUND((SELECT est FROM ea), 9) AS est_distinct,
@@ -670,7 +670,7 @@ def q_kmv_join_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                dsum(F.col("o_totalprice")).alias("total_price"),
+                exact_sum(F.col("o_totalprice")).alias("total_price"),
             )
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
@@ -694,7 +694,7 @@ def q_kmv_join_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_runtime_bloom_filter",
     oracle=f"""
     SELECT o.o_orderstatus, COUNT(*) AS n_items,
-           {sql_dsum('l.l_extendedprice')} AS total_price
+           {sql_exact_sum('l.l_extendedprice')} AS total_price
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderpriority = '1-URGENT'
@@ -736,7 +736,7 @@ def q_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
-                dsum(F.col("l_extendedprice")).alias("total_price"),
+                exact_sum(F.col("l_extendedprice")).alias("total_price"),
             )
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
@@ -765,7 +765,7 @@ def q_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: by q_bloom_semijoin and its streaming twin q_stream_bloom_filter
 #: (whose OR-merged filter is value-equal to the batch one, so the same
 #: oracle checks both)
-BLOOM_AUDIT_ORACLE = """
+BLOOM_AUDIT_ORACLE = f"""
     WITH dim AS (
       SELECT DISTINCT c_custkey FROM customer
       WHERE c_mktsegment = 'BUILDING'
@@ -815,7 +815,7 @@ BLOOM_AUDIT_ORACLE = """
                AS n_exact,
              CAST(SUM(CASE WHEN is_member AND NOT bloom_pass
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_false_neg,
-             (CAST(CAST(SUM(CAST(CAST(CAST(CASE WHEN is_member THEN o_totalprice ELSE 0 END AS DECIMAL(18,6)) AS DECIMAL(30,6)) * 1000000 AS BIGINT)) AS HUGEINT) AS DOUBLE) / 1000000.0)
+             {sql_exact_sum("CASE WHEN is_member THEN o_totalprice ELSE 0 END")}
                AS member_revenue
       FROM checked
     )
@@ -862,7 +862,7 @@ def bloom_audit_frame(
         F.sum(
             (F.col("is_member") & ~F.col("bloom_pass")).cast("bigint")
         ).cast("bigint").alias("n_false_neg"),
-        dsum(
+        exact_sum(
             F.when(F.col("is_member"), F.col("o_totalprice"))
             .otherwise(F.lit(0.0))
         ).alias("member_revenue"),
@@ -959,7 +959,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT COUNT(*) FROM d_small) <= 10000 AS broadcast_used,
              (SELECT CAST(COUNT(*) AS BIGINT)
               FROM f_small f JOIN d_small d USING (key)) AS n_rows,
-             (SELECT {sql_dsum('f.payload + d.dim_val')}
+             (SELECT {sql_exact_sum('f.payload + d.dim_val')}
               FROM f_small f JOIN d_small d USING (key)) AS total
       UNION ALL
       SELECT 'hot_key',
@@ -975,7 +975,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT COUNT(*) FROM d_orders) <= 10000,
              (SELECT CAST(COUNT(*) AS BIGINT)
               FROM f_hot f JOIN d_orders d USING (key)),
-             (SELECT {sql_dsum('f.payload + d.dim_val')}
+             (SELECT {sql_exact_sum('f.payload + d.dim_val')}
               FROM f_hot f JOIN d_orders d USING (key))
       UNION ALL
       SELECT 'uniform',
@@ -991,7 +991,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT COUNT(*) FROM d_orders) <= 10000,
              (SELECT CAST(COUNT(*) AS BIGINT)
               FROM f_uni f JOIN d_orders d USING (key)),
-             (SELECT {sql_dsum('f.payload + d.dim_val')}
+             (SELECT {sql_exact_sum('f.payload + d.dim_val')}
               FROM f_uni f JOIN d_orders d USING (key))
     ) ORDER BY which
     """,
@@ -1063,7 +1063,7 @@ def q_skew_join_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         agg = fact.join(hinted, "key").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum(F.col("payload") + F.col("dim_val")).alias("total"),
+            exact_sum(F.col("payload") + F.col("dim_val")).alias("total"),
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
         return agg.select(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.frequent import heavy_hitters
-from .registry import davg, dsum, register, sql_davg, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -165,7 +165,7 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST((SELECT t1 FROM tot) AS BIGINT) AS n_first,
            CAST((SELECT t2 FROM tot) AS BIGINT) AS n_second,
            COUNT(*) AS n_buckets,
-           0.5 * {sql_dsum('abs(CAST(n1 AS DOUBLE) / (SELECT t1 FROM tot) '
+           0.5 * {sql_exact_sum('abs(CAST(n1 AS DOUBLE) / (SELECT t1 FROM tot) '
                            '- CAST(n2 AS DOUBLE) / (SELECT t2 FROM tot))')}
              AS tvd
     FROM per_bucket
@@ -205,7 +205,7 @@ def q_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("t1").cast("bigint").alias("n_first"),
             F.max("t2").cast("bigint").alias("n_second"),
             F.count(F.lit(1)).alias("n_buckets"),
-            (F.lit(0.5) * dsum(absdiff)).alias("tvd"),
+            (F.lit(0.5) * exact_sum(absdiff)).alias("tvd"),
         )
     )
 
@@ -213,7 +213,7 @@ def q_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_orc_roundtrip",
     oracle=f"""
-    SELECT l_returnflag, COUNT(*) AS n, {sql_dsum('l_quantity')} AS sum_qty
+    SELECT l_returnflag, COUNT(*) AS n, {sql_exact_sum('l_quantity')} AS sum_qty
     FROM lineitem WHERE l_orderkey < 1000 GROUP BY l_returnflag
     """,
     doc="ORC format roundtrip: lineitem slice written as ORC (zlib), "
@@ -235,7 +235,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("l_returnflag")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                dsum(F.col("l_quantity")).alias("sum_qty"),
+                exact_sum(F.col("l_quantity")).alias("sum_qty"),
             )
             .localCheckpoint(eager=True)
         )
@@ -263,13 +263,13 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ), means AS (
       SELECT user_id,
-             {sql_davg("v")} AS user_mean
+             {sql_exact_sum("v", mean=True)} AS user_mean
       FROM masked GROUP BY user_id
     )
     SELECT m.user_id,
            COUNT(*) AS n,
            COUNT(*) FILTER (m.v IS NULL) AS n_imputed,
-           {sql_dsum("m.v")}
+           {sql_exact_sum("m.v")}
              + COUNT(*) FILTER (m.v IS NULL) * MAX(s.user_mean)
              AS total_after_impute
     FROM masked m JOIN means s ON m.user_id = s.user_id
@@ -294,7 +294,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v"),
     )
     means = masked.groupBy("user_id").agg(
-        davg(F.col("v")).alias("user_mean")
+        exact_sum(F.col("v"), mean=True).alias("user_mean")
     )
     return (
         masked.join(means, "user_id")
@@ -303,7 +303,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.count_if(F.col("v").isNull()).alias("n_imputed"),
             (
-                dsum(F.col("v"))
+                exact_sum(F.col("v"))
                 + F.count_if(F.col("v").isNull()) * F.max("user_mean")
             ).alias("total_after_impute"),
         )
@@ -352,7 +352,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT e.event_type,
            COUNT(*) AS n,
            COUNT(*) FILTER (e.value < b.lo OR e.value > b.hi) AS n_clipped,
-           {sql_dsum('least(greatest(e.value, b.lo), b.hi)')} AS total_winsorized
+           {sql_exact_sum('least(greatest(e.value, b.lo), b.hi)')} AS total_winsorized
     FROM events e JOIN bounds b ON e.event_type = b.event_type
     GROUP BY e.event_type
     """,
@@ -367,7 +367,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from .registry import dsum
+    from .registry import exact_sum
 
     ev = load_table(spark, sf_dir, "events")
     # NULL-proof bound selection (mirrors the oracle CTE filters): the
@@ -407,7 +407,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_if(
                 (F.col("value") < F.col("lo")) | (F.col("value") > F.col("hi"))
             ).alias("n_clipped"),
-            dsum(clipped).alias("total_winsorized"),
+            exact_sum(clipped).alias("total_winsorized"),
         )
     )
 
@@ -495,11 +495,11 @@ def q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_xml_roundtrip",
     oracle="""
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-           {dsum_v} AS sum_value,
+           {sum_v} AS sum_value,
            CAST(MIN(event_id) AS BIGINT) AS min_id,
            CAST(MAX(event_id) AS BIGINT) AS max_id
     FROM events WHERE event_id < 2000 GROUP BY event_type
-    """.format(dsum_v=sql_dsum("value")),
+    """.format(sum_v=sql_exact_sum("value")),
     doc="XML data-source roundtrip (Spark 4 NATIVE XML, the Databricks "
         "spark-xml donation — no external package): an events slice "
         "written as element-per-row XML (rowTag) and read back with "
@@ -530,7 +530,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("value"))
+                exact_sum(F.col("value"))
                 .alias("sum_value"),
                 F.min("event_id").cast("bigint").alias("min_id"),
                 F.max("event_id").cast("bigint").alias("max_id"),

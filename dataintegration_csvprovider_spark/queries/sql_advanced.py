@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.skyline import skyline
-from .registry import dsum, register, sql_dsum, sql_dsum_shared
+from .registry import exact_sum, register, sql_exact_sum
 
 
 def _register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -47,10 +47,10 @@ def _register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
       SELECT d + INTERVAL 1 DAY FROM spine WHERE d < DATE '1995-04-30'
     )
     SELECT s.d AS day, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders,
-           {dsum} AS day_revenue
+           {rev} AS day_revenue
     FROM spine s LEFT JOIN orders o ON o.o_orderdate = s.d
     GROUP BY s.d
-    """.format(dsum=sql_dsum("o.o_totalprice")),
+    """.format(rev=sql_exact_sum("o.o_totalprice")),
     doc="WITH RECURSIVE date spine (61 days) left-joined to orders: the "
         "recursion is metadata-sized, the join is the distributed part.",
     tags=("sql", "recursive"),
@@ -64,7 +64,7 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT date_add(d, 1) FROM spine WHERE d < DATE '1995-04-30'
         )
         SELECT s.d AS day, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders,
-               {sql_dsum_shared("o.o_totalprice")}
+               {sql_exact_sum("o.o_totalprice")}
                  AS day_revenue
         FROM spine s LEFT JOIN orders o ON o.o_orderdate = s.d
         GROUP BY s.d
@@ -145,9 +145,9 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders WHERE o_orderkey % 2 = 1
     )
     SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
-           {dsum} AS total_price
+           {total} AS total_price
     FROM u GROUP BY o_orderstatus
-    """.format(dsum=sql_dsum("o_totalprice")),
+    """.format(total=sql_exact_sum("o_totalprice")),
     doc="mergeSchema parquet read across files written before/after an "
         "additive column change; missing columns surface as NULLs. Footer "
         "merge is driver-side metadata work — the engine keeps evolution "
@@ -175,7 +175,7 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged.groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                dsum(F.col("o_totalprice")).alias("total_price"),
+                exact_sum(F.col("o_totalprice")).alias("total_price"),
             )
             .localCheckpoint(eager=True)
         )
@@ -226,7 +226,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return skyline(orders, minimize=["o_totalprice"], maximize=["o_orderdate"])
 
 
-_SUM_QTY = sql_dsum("l_quantity")
+_SUM_QTY = sql_exact_sum("l_quantity")
 
 
 @register(
@@ -244,7 +244,7 @@ _SUM_QTY = sql_dsum("l_quantity")
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n,
            {_SUM_QTY} AS sum_qty,
-           {sql_dsum('l_extendedprice')} AS sum_price,
+           {sql_exact_sum('l_extendedprice')} AS sum_price,
            CAST(MIN(l_shipdate) AS VARCHAR) AS min_ship,
            CAST(MAX(l_shipdate) AS VARCHAR) AS max_ship,
            TRUE AS filter_pushed
@@ -274,8 +274,8 @@ def q_orc_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         filtered = back.filter(F.col("l_shipdate") >= F.lit("1995-01-01"))
         agg = filtered.groupBy("l_returnflag").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            dsum(F.col("l_quantity")).alias("sum_qty"),
-            dsum(F.col("l_extendedprice")).alias("sum_price"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_price"),
             F.min("l_shipdate").cast("string").alias("min_ship"),
             F.max("l_shipdate").cast("string").alias("max_ship"),
         )

@@ -9,22 +9,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
-from .registry import register, sql_dsum_shared
+from .registry import register, sql_exact_sum
 
 # r13 decimal-sum migration: every revenue/price sum in this module is
 # data-scaled (global or large-group lineitem/orders sums cross the
 # 2^33 decimal->double double-rounding threshold from sf0.1 up), so all
 # go through the dialect-neutral 128-bit micros form — the SAME string
 # in the Spark SQL text and the DuckDB oracle.
-_REV = sql_dsum_shared("l_extendedprice * l_discount")
-_PROMO_NUM = sql_dsum_shared(
+_REV = sql_exact_sum("l_extendedprice * l_discount")
+_PROMO_NUM = sql_exact_sum(
     "CASE WHEN p_type = 'PROMO' "
     "THEN l_extendedprice * (1 - l_discount) ELSE 0 END"
 )
-_PROMO_DEN = sql_dsum_shared("l_extendedprice * (1 - l_discount)")
-_TOTPRICE = sql_dsum_shared("o_totalprice")
-_EXTPRICE = sql_dsum_shared("l_extendedprice")
-_DISC_REV = sql_dsum_shared("l_extendedprice * (1.0 - l_discount)")
+_PROMO_DEN = sql_exact_sum("l_extendedprice * (1 - l_discount)")
+_TOTPRICE = sql_exact_sum("o_totalprice")
+_EXTPRICE = sql_exact_sum("l_extendedprice")
+_DISC_REV = sql_exact_sum("l_extendedprice * (1.0 - l_discount)")
 
 
 def _register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -217,7 +217,7 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT price_band(l_extendedprice) AS band,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {sql_dsum_shared("disc_price(l_extendedprice, l_discount)")}
+               {sql_exact_sum("disc_price(l_extendedprice, l_discount)")}
                  AS revenue
         FROM lineitem
         GROUP BY price_band(l_extendedprice)

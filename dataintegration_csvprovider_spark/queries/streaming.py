@@ -22,13 +22,13 @@ from ..streaming.events import (
     stream_from_parquet,
     tumbling_agg,
 )
-from .registry import dsum, dsum12, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 # r13 decimal-sum migration: per-window/per-session/per-segment event
 # value sums are data-scaled (rows per window grow with event density),
 # so every streaming total rides the exact micros form.
-_DSUM_VALUE = sql_dsum("value")
-_DSUM_EVALUE = sql_dsum("e.value")
+_DSUM_VALUE = sql_exact_sum("value")
+_DSUM_EVALUE = sql_exact_sum("e.value")
 from .textmining import _BM25_ORACLE_CORE
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -320,7 +320,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
-            dsum(F.col("value")).alias("exact_total")
+            exact_sum(F.col("value")).alias("exact_total")
         )
     )
     tol = F.greatest(F.abs(F.col("exact_total")), F.lit(1.0)) * 1e-6
@@ -400,7 +400,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = events.join(cust, events.user_id == cust.c_custkey)
     agg = enriched.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(F.col("value")).alias("total"),
+        exact_sum(F.col("value")).alias("total"),
     )
     return run_to_completion(agg, output_mode="complete")
 
@@ -915,7 +915,7 @@ def _stream_minhash_perm_values() -> str:
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_flagged,
            CAST(COALESCE(SUM(n_dups), 0) AS BIGINT) AS total_dups,
-           COALESCE((CAST(CAST(SUM(CAST(CAST(CAST(max_est AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0), 0.0) AS est_sum
+           COALESCE({sql_exact_sum("max_est", scale=12)}, 0.0) AS est_sum
     FROM per
     """,
     doc="STREAMING corpus dedup gate (operators/dedup.py "
@@ -966,7 +966,7 @@ def q_stream_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_flagged"),
             F.sum("n_dups").cast("bigint").alias("total_dups"),
-            dsum12(F.col("max_est")).alias("est_sum"),
+            exact_sum(F.col("max_est"), scale=12).alias("est_sum"),
         )
     )
 
@@ -3303,7 +3303,7 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (odds * tfpart).alias("s")
     )
     bm = per_term.groupBy("doc_id").agg(
-        F.round(dsum12(F.col("s")), 9).alias("score")
+        F.round(exact_sum(F.col("s"), scale=12), 9).alias("score")
     )
     top = bm.orderBy(F.col("score").desc(), F.col("doc_id")).limit(20)
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum12, register, sql_dsum12
+from .registry import exact_sum, register, sql_exact_sum
 
 
 def _doc_terms(docs: DataFrame) -> DataFrame:
@@ -493,11 +493,11 @@ def _bm25_scores_docs(docs: DataFrame) -> DataFrame:
         "doc_id", (odds * tfpart).alias("s")
     )
     return per_term.groupBy("doc_id").agg(
-        F.round(dsum12(F.col("s")), 9).alias("score")
+        F.round(exact_sum(F.col("s"), scale=12), 9).alias("score")
     )
 
 
-_BM25_ORACLE_CORE = """
+_BM25_ORACLE_CORE = f"""
     N AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
                  CAST(SUM(len(list_filter(string_split(text, ' '),
                                           t -> t <> ''))) AS DOUBLE)
@@ -525,7 +525,7 @@ _BM25_ORACLE_CORE = """
       FROM tf JOIN dft USING (term) CROSS JOIN N n),
     bm AS (
       SELECT doc_id,
-             round((CAST(CAST(SUM(CAST(CAST(CAST(s AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0), 9)
+             round({sql_exact_sum("s", scale=12)}, 9)
                AS score
       FROM per GROUP BY doc_id)
 """
@@ -571,7 +571,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM bm),
     dens AS (
       SELECT doc_id,
-             round((CAST(CAST(SUM(CAST(CAST(CAST(CASE WHEN term IN ('spark', 'hash', 'vector') THEN 1.0 ELSE 0.0 END AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0)
+             round({sql_exact_sum("CASE WHEN term IN ('spark', 'hash', 'vector') THEN 1.0 ELSE 0.0 END", scale=12)}
                    / CAST(MIN(dl) AS DOUBLE), 12) AS dens
       FROM t0 GROUP BY doc_id),
     rb AS (
@@ -626,9 +626,10 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.groupBy("doc_id")
         .agg(
             F.round(
-                dsum12(
+                exact_sum(
                     F.when(F.col("term").isin(*_BM25_QUERY), F.lit(1.0))
-                    .otherwise(F.lit(0.0))
+                    .otherwise(F.lit(0.0)),
+                    scale=12,
                 )
                 / F.min("dl").cast("double"),
                 12,
@@ -722,7 +723,7 @@ _BM25_BATCH = (
 
 @register(
     "q_bm25_batch",
-    oracle="""
+    oracle=f"""
     WITH q(qid, term) AS (
       VALUES (1, 'spark'), (1, 'hash'), (1, 'vector'),
              (2, 'join'), (2, 'merge'),
@@ -756,7 +757,7 @@ _BM25_BATCH = (
       CROSS JOIN N n),
     bm AS (
       SELECT qid, doc_id,
-             round((CAST(CAST(SUM(CAST(CAST(CAST(s AS DECIMAL(24,12)) AS DECIMAL(38,12)) * 1000000000000 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS DOUBLE) / 1000000000000.0), 9)
+             round({sql_exact_sum("s", scale=12)}, 9)
                AS score
       FROM per GROUP BY qid, doc_id),
     ranked AS (
@@ -818,7 +819,7 @@ def q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "doc_id", (odds * tfpart).alias("s"))
     )
     bm = per.groupBy("qid", "doc_id").agg(
-        F.round(dsum12(F.col("s")), 9).alias("score")
+        F.round(exact_sum(F.col("s"), scale=12), 9).alias("score")
     )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id"))
     return (

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, dsum_win, register, sql_dsum, sql_dsum_over
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -29,7 +29,7 @@ from .registry import dsum, dsum_win, register, sql_dsum, sql_dsum_over
     oracle=f"""
     WITH buckets AS (
       SELECT user_id, date_trunc('hour', ts) AS bucket_hour,
-             {sql_dsum('value')} AS v
+             {sql_exact_sum('value')} AS v
       FROM events
       WHERE user_id < 10
       GROUP BY user_id, date_trunc('hour', ts)
@@ -63,7 +63,7 @@ def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         ev.withColumn("bucket_hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("user_id", "bucket_hour")
-        .agg(dsum(F.col("value")).alias("v"))
+        .agg(exact_sum(F.col("value")).alias("v"))
     )
     spine = (
         buckets.groupBy("user_id")
@@ -95,7 +95,7 @@ def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOURLY_SQL = """
     hourly AS (
       SELECT user_id, date_trunc('hour', ts) AS bucket_hour,
-             {dsum_v} AS x
+             {sum_v} AS x
       FROM events WHERE user_id < 10
       GROUP BY user_id, date_trunc('hour', ts)
     ), numbered AS (
@@ -103,7 +103,7 @@ _HOURLY_SQL = """
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY bucket_hour) AS i
       FROM hourly
     )
-""".format(dsum_v=sql_dsum("value"))
+""".format(sum_v=sql_exact_sum("value"))
 
 
 @register(
@@ -150,7 +150,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.withColumn("bucket_hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("user_id", "bucket_hour")
-        .agg(dsum(F.col("value")).alias("x"))
+        .agg(exact_sum(F.col("value")).alias("x"))
     )
     w = Window.partitionBy("user_id").orderBy("bucket_hour")
     numbered = hourly.withColumn("i", F.row_number().over(w))
@@ -191,8 +191,8 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     , stats AS (
       SELECT user_id, bucket_hour, x,
              COUNT(x) OVER w AS n,
-             {sql_dsum_over("x", "OVER w")} AS s,
-             {sql_dsum_over("x * x", "OVER w")} AS s2
+             {sql_exact_sum("x", over="OVER w")} AS s,
+             {sql_exact_sum("x * x", over="OVER w")} AS s2
       FROM numbered
       WINDOW w AS (PARTITION BY user_id ORDER BY i
                    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
@@ -217,7 +217,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.withColumn("bucket_hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("user_id", "bucket_hour")
-        .agg(dsum(F.col("value")).alias("x"))
+        .agg(exact_sum(F.col("value")).alias("x"))
     )
     wo = Window.partitionBy("user_id").orderBy("bucket_hour")
     numbered = hourly.withColumn("i", F.row_number().over(wo))
@@ -231,8 +231,8 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket_hour",
         "x",
         F.count("x").over(w).alias("n"),
-        dsum_win(F.col("x"), w).alias("s"),
-        dsum_win(F.col("x") * F.col("x"), w).alias("s2"),
+        exact_sum(F.col("x"), over=w).alias("s"),
+        exact_sum(F.col("x") * F.col("x"), over=w).alias("s2"),
     )
     mean = F.col("s") / F.col("n")
     var = F.greatest(
@@ -274,13 +274,13 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * sqrt(greatest(n * syy - sy * sy, 1e-12))) AS corr_24h
     FROM stats WHERE n >= 24
     """.format(
-        x=sql_dsum("CASE WHEN event_type = 'view' THEN value END"),
-        y=sql_dsum("CASE WHEN event_type = 'click' THEN value END"),
-        sx=sql_dsum_over("x", "OVER w"),
-        sy=sql_dsum_over("y", "OVER w"),
-        sxy=sql_dsum_over("x * y", "OVER w"),
-        sxx=sql_dsum_over("x * x", "OVER w"),
-        syy=sql_dsum_over("y * y", "OVER w"),
+        x=sql_exact_sum("CASE WHEN event_type = 'view' THEN value END"),
+        y=sql_exact_sum("CASE WHEN event_type = 'click' THEN value END"),
+        sx=sql_exact_sum("x", over="OVER w"),
+        sy=sql_exact_sum("y", over="OVER w"),
+        sxy=sql_exact_sum("x * y", over="OVER w"),
+        sxx=sql_exact_sum("x * x", over="OVER w"),
+        syy=sql_exact_sum("y * y", over="OVER w"),
     ),
     doc="Trailing-24h rolling Pearson correlation between the hourly "
         "view-value and click-value series: all five moments come from "
@@ -303,10 +303,10 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
         .agg(
-            dsum(
+            exact_sum(
                 F.when(F.col("event_type") == "view", F.col("value"))
             ).alias("x"),
-            dsum(
+            exact_sum(
                 F.when(F.col("event_type") == "click", F.col("value"))
             ).alias("y"),
         )
@@ -335,11 +335,11 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "__carry",
         F.count(F.lit(1)).over(w).alias("n"),
-        dsum_win(F.col("x"), w).alias("sx"),
-        dsum_win(F.col("y"), w).alias("sy"),
-        dsum_win(F.col("x") * F.col("y"), w).alias("sxy"),
-        dsum_win(F.col("x") * F.col("x"), w).alias("sxx"),
-        dsum_win(F.col("y") * F.col("y"), w).alias("syy"),
+        exact_sum(F.col("x"), over=w).alias("sx"),
+        exact_sum(F.col("y"), over=w).alias("sy"),
+        exact_sum(F.col("x") * F.col("y"), over=w).alias("sxy"),
+        exact_sum(F.col("x") * F.col("x"), over=w).alias("sxx"),
+        exact_sum(F.col("y") * F.col("y"), over=w).alias("syy"),
     ).filter(~F.col("__carry"))
     corr = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.sqrt(
@@ -388,7 +388,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.withColumn("bucket_hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("user_id", "bucket_hour")
-        .agg(dsum(F.col("value")).alias("x"))
+        .agg(exact_sum(F.col("value")).alias("x"))
     )
     w = Window.partitionBy("user_id").orderBy("bucket_hour")
     numbered = hourly.withColumn("i", F.row_number().over(w))
@@ -418,7 +418,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH buckets AS (
       SELECT user_id, date_trunc('hour', ts) AS bucket_hour,
-             {sql_dsum('value')} AS v
+             {sql_exact_sum('value')} AS v
       FROM events
       WHERE user_id < 10
       GROUP BY user_id, date_trunc('hour', ts)
@@ -479,7 +479,7 @@ def q_gap_fill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         ev.withColumn("bucket_hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("user_id", "bucket_hour")
-        .agg(dsum(F.col("value")).alias("v"))
+        .agg(exact_sum(F.col("value")).alias("v"))
     )
     spine = (
         buckets.groupBy("user_id")

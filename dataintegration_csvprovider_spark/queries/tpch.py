@@ -11,14 +11,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import dsum, register, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
     "q3_shipping_priority",
     oracle=f"""
     SELECT l.l_orderkey,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            o.o_orderdate, o.o_orderpriority
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -49,7 +49,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li, li.l_orderkey == orders.o_orderkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -63,7 +63,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q5_local_supplier_volume",
     oracle=f"""
     SELECT n.n_name,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -97,7 +97,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -108,7 +108,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle=f"""
     SELECT c.c_custkey, c.c_name,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            CAST(c.c_acctbal AS DOUBLE) AS c_acctbal,
            n.n_name
     FROM customer c
@@ -134,7 +134,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -155,7 +155,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT p.p_brand, s.s_name,
            COUNT(*) AS n_items,
-           {sql_dsum('l.l_quantity')} AS total_qty
+           {sql_exact_sum('l.l_quantity')} AS total_qty
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -177,7 +177,7 @@ def q_part_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand", "s_name")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            dsum(F.col("l_quantity")).alias("total_qty"),
+            exact_sum(F.col("l_quantity")).alias("total_qty"),
         )
         .filter(F.col("n_items") >= 5)
     )

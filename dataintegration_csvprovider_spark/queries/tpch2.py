@@ -13,7 +13,7 @@ affected queries substitute documented proxies while keeping the
 
 All queries are stock DataFrame ops: Catalyst broadcasts the dim
 chain, partial-aggregates before every shuffle, and decorrelates the
-EXISTS/IN subqueries into semi/anti joins. Sums follow the dsum
+EXISTS/IN subqueries into semi/anti joins. Sums follow the exact_sum
 decimal-accumulation rule so the DuckDB oracle hash-matches.
 
 Reference parity note: the reference (an ETL connector) has no
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .registry import davg, dsum, register, sql_davg, sql_dsum
+from .registry import exact_sum, register, sql_exact_sum
 
 
 @register(
@@ -136,7 +136,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS INTEGER) AS l_year,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM supplier s
     JOIN lineitem l ON s.s_suppkey = l.l_suppkey
     JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -182,7 +182,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("l_year", F.year("l_shipdate").cast("int"))
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -210,8 +210,8 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
     )
     SELECT o_year,
-           CAST({sql_dsum("CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END")}
-                / {sql_dsum('volume')} AS DOUBLE) AS mkt_share
+           CAST({sql_exact_sum("CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END")}
+                / {sql_exact_sum('volume')} AS DOUBLE) AS mkt_share
     FROM all_nations
     GROUP BY o_year
     ORDER BY o_year
@@ -249,10 +249,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_year")
         .agg(
             (
-                dsum(
+                exact_sum(
                     F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0))
                 )
-                / dsum(vol)
+                / exact_sum(vol)
             )
             .cast("double")
             .alias("mkt_share")
@@ -266,7 +266,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS INTEGER) AS o_year,
-           {sql_dsum('l.l_extendedprice * (1 - l.l_discount)'
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)'
                      ' - 0.1 * p.p_retailprice * l.l_quantity')} AS sum_profit
     FROM part p
     JOIN lineitem l ON p.p_partkey = l.l_partkey
@@ -300,7 +300,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_year", F.year("o_orderdate").cast("int"))
         .withColumnRenamed("n_name", "nation")
         .groupBy("nation", "o_year")
-        .agg(dsum(profit).alias("sum_profit"))
+        .agg(exact_sum(profit).alias("sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -317,11 +317,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE r.r_name = 'EUROPE'
     )
     SELECT l_partkey AS p_partkey,
-           {sql_dsum('l_extendedprice * l_quantity')} AS part_value
+           {sql_exact_sum('l_extendedprice * l_quantity')} AS part_value
     FROM scoped
     GROUP BY l_partkey
-    HAVING {sql_dsum('l_extendedprice * l_quantity')} >
-           (SELECT {sql_dsum('l_extendedprice * l_quantity')} * 0.001
+    HAVING {sql_exact_sum('l_extendedprice * l_quantity')} >
+           (SELECT {sql_exact_sum('l_extendedprice * l_quantity')} * 0.001
             FROM scoped)
     ORDER BY part_value DESC, p_partkey
     """,
@@ -343,9 +343,9 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     value = F.col("l_extendedprice") * F.col("l_quantity")
     per_part = scoped.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
-        dsum(value).alias("part_value")
+        exact_sum(value).alias("part_value")
     )
-    total = scoped.agg((dsum(value) * 0.001).alias("threshold"))
+    total = scoped.agg((exact_sum(value) * 0.001).alias("threshold"))
     # scalar threshold broadcast to every partition — no second scan of
     # the per-part aggregate, no shuffle.
     return (
@@ -439,7 +439,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             {sql_dsum('l_extendedprice * (1 - l_discount)')} AS total_revenue
+             {sql_exact_sum('l_extendedprice * (1 - l_discount)')} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -462,7 +462,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
             "total_revenue"
         )
     )
@@ -525,7 +525,7 @@ def q16_supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT l_partkey, 0.2 * AVG(l_quantity) AS qty_cut
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT {sql_dsum('l.l_extendedprice')}
+    SELECT {sql_exact_sum('l.l_extendedprice')}
            / 7.0 AS avg_yearly
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -550,7 +550,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(part_avg, li.l_partkey == part_avg.avg_partkey)
         .filter(F.col("l_quantity") < F.col("qty_cut"))
         .agg(
-            (dsum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly")
+            (exact_sum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly")
         )
     )
 
@@ -560,12 +560,12 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
            CAST(o.o_totalprice AS DOUBLE) AS o_totalprice,
-           {sql_dsum('l.l_quantity')} AS total_qty
+           {sql_exact_sum('l.l_quantity')} AS total_qty
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
-    HAVING {sql_dsum('l.l_quantity')} > 250
+    HAVING {sql_exact_sum('l.l_quantity')} > 250
     ORDER BY o_totalprice DESC, o.o_orderdate, o.o_orderkey
     LIMIT 100
     """,
@@ -584,7 +584,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(dsum(F.col("l_quantity")).alias("total_qty"))
+        .agg(exact_sum(F.col("l_quantity")).alias("total_qty"))
         .filter(F.col("total_qty") > 250)
         .select(
             "c_name",
@@ -602,7 +602,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q19_disjunctive_revenue",
     oracle=f"""
-    SELECT {sql_dsum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+    SELECT {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
@@ -631,7 +631,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .filter(pred)
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -757,10 +757,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q22_idle_customers",
     oracle=f"""
     SELECT c.c_mktsegment, COUNT(*) AS numcust,
-           {sql_dsum('c.c_acctbal')} AS totacctbal
+           {sql_exact_sum('c.c_acctbal')} AS totacctbal
     FROM customer c
     WHERE c.c_mktsegment IN ('AUTOMOBILE', 'BUILDING', 'FURNITURE')
-      AND c.c_acctbal > (SELECT {sql_davg('c2.c_acctbal')} FROM customer c2
+      AND c.c_acctbal > (SELECT {sql_exact_sum('c2.c_acctbal', mean=True)} FROM customer c2
                          WHERE c2.c_acctbal > 0)
       AND NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
@@ -778,7 +778,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        davg(F.col("c_acctbal")).alias("avg_bal")
+        exact_sum(F.col("c_acctbal"), mean=True).alias("avg_bal")
     )
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -795,7 +795,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            dsum(F.col("c_acctbal")).alias("totacctbal"),
+            exact_sum(F.col("c_acctbal")).alias("totacctbal"),
         )
         .orderBy("c_mktsegment")
     )

@@ -337,6 +337,11 @@ class CsvSource:
             # cp1252/cp1251 need the legacy charset gate; runtime-settable,
             # so sessions not built by our factory still work
             spark.conf.set("spark.sql.legacy.javaCharsets", "true")
+        # with parser column pruning on, a scan reading fewer than all
+        # columns never sees a defective row's missing/extra fields, so
+        # DROPMALFORMED keeps it and FAILFAST does not fail (E1/E2 hold
+        # only when every field is parsed)
+        spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
         opts = self.options.spark_read_options()
         if overridden:
             # an edited/explicit schema binds by ordinal and its names are

@@ -21,7 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.registry import dsum
+from ..queries.registry import exact_sum
 from pyspark.sql import types as T
 
 from ..sources.csv_source import CsvSource
@@ -67,7 +67,7 @@ def tumbling_agg(
         .groupBy(F.window(ts_col, window), *group_cols)
         .agg(
             F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value")).alias("total"),
+            exact_sum(F.col("value")).alias("total"),
         )
     )
 
@@ -102,7 +102,7 @@ def session_agg(
         .groupBy(F.session_window(ts_col, gap), F.col(key_col))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value")).alias("total"),
+            exact_sum(F.col("value")).alias("total"),
         )
     )
 

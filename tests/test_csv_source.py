@@ -105,10 +105,15 @@ def test_defective_rows_skip_and_failfast(spark, tmp_path):
     vals = [tuple(r) for r in ok.read(spark, "t").collect()]
     assert ("1", "2") in vals and ("3", "4") in vals
     assert len(vals) == 2
+    # a column-subset projection must skip the same rows
+    assert ok.read(spark, "t").select("a").count() == 2
+    assert len(ok.read(spark, "t").select("a").collect()) == 2
     # E2: FAILFAST raises without the flag
     strict = CsvSource(folder=str(tmp_path))
     with pytest.raises(Exception):
         strict.read(spark, "t").collect()
+    with pytest.raises(Exception):
+        strict.read(spark, "t").select("a").collect()
 
 
 def test_defective_rows_audit_trail(spark, tmp_path):

@@ -10,10 +10,9 @@ ulp exceeds the decimal quantum (|sum| > 2^33 for 6-dp, ~2^12 for
 12-dp). TPC-H Q1's sum_charge flipped at the round-12 sf1 fixture.
 
 Sanctioned forms (not flagged):
-- the micros/pico/nano integer pipeline (``dsum``/``dsum12``/
-  ``sql_dsum``/``sql_dsum_shared``/``dsum_win`` and inline
-  equivalents): per-row exact integer units summed on a 128-bit
-  accumulator (``DECIMAL(38,0)`` / HUGEINT), ONE int->double
+- the micros/pico/nano integer pipeline of ``exact_sum``/
+  ``sql_exact_sum`` (queries/registry.py): per-row exact integer units
+  summed on a 128-bit ``DECIMAL(38,0)`` accumulator, ONE int->double
   conversion — identical in both engines at any scale;
 - exact-integer accumulators (``SUM(CAST(x AS DECIMAL(p,0)))``,
   integer sums cast to BIGINT);
@@ -25,6 +24,12 @@ Sanctioned forms (not flagged):
 
 Every site is either migrated or annotated; a new unannotated site
 fails this test.
+
+A second check keeps that pipeline in ONE place: a per-row quantize
+into integer micro/nano/pico units (``.cast("decimal(p,s)") *
+F.lit(10**k)`` then ``.cast("long")``/``decimal(38,0)``, or SQL
+``* 1000000 AS BIGINT``) outside registry.py is an inline copy of
+``exact_sum``/``sql_exact_sum`` unless annotated ``decimal-sum-ok:``.
 """
 from __future__ import annotations
 
@@ -49,9 +54,7 @@ def _exempt_sql(seg: str) -> bool:
     """128-bit / exact-integer accumulator forms."""
     head = seg[:300]
     if re.search(r"AS\s+DECIMAL\(38,0\)\)\)", head, re.I):
-        return True  # micros/pico pipeline (per-row integral units)
-    if re.search(r"AS\s+BIGINT\)\)\s*AS\s+HUGEINT", head, re.I):
-        return True  # sql_dsum's HUGEINT accumulator
+        return True  # sql_exact_sum's per-row integral units
     if re.search(r"\)\s*AS\s+DECIMAL\(38,0\)\)", head, re.I):
         return True  # SUM(...) cast to the 128-bit exact accumulator
     if re.search(r"AS\s+DECIMAL\(\d+,0\)\)", head, re.I):
@@ -87,10 +90,6 @@ def _sites() -> list[str]:
             # exact accumulators: decimal(38,0)/decimal(19,0) per-row
             if re.search(r"decimal\(38,0\)|decimal\(\d+,0\)", seg):
                 continue
-            # the sanctioned inline micros forms multiply into integer
-            # units before a 128-bit cast
-            if "1_000_000" in seg or "1000000" in seg:
-                continue
             ln = src[:m.start()].count("\n") + 1
             ctx = "\n".join(lines[max(0, ln - 9):ln])
             if ANNOT.search(ctx) or ANNOT.search(lines[ln - 1]):
@@ -103,7 +102,67 @@ def test_no_unannotated_old_form_decimal_sums():
     offenders = _sites()
     assert not offenders, (
         "old-form decimal->double sum sites without a decimal-sum-ok/"
-        "bounded-sum annotation (migrate to dsum/dsum12/sql_dsum or "
+        "bounded-sum annotation (migrate to exact_sum/sql_exact_sum or "
         "annotate why the sum is bounded forever):\n"
         + "\n".join(offenders)
     )
+
+
+#: Spark-side per-row quantize into integer units: decimal cast, times a
+#: power-of-ten literal, then an integer or DECIMAL(38,0) cast
+PY_QUANT = re.compile(
+    r"""\.cast\(\s*(?:["']decimal\(\s*\d+\s*,\s*\d+\s*\)["']|[A-Z_][A-Z0-9_]*)\s*\)"""
+    r"""\s*\*\s*F\.lit\(\s*(?:1_?000_?000[\d_]*|10\s*\*\*\s*\d+)\s*\)\s*\)?"""
+    r"""\s*\.cast\(\s*["'](?:long|bigint|decimal\(38,\s*0\))["']""",
+    re.I,
+)
+#: SQL-side per-row quantize into integer micro/nano/pico units
+SQL_QUANT = re.compile(
+    r"\*\s*1000000(?:000)*\s+AS\s+(?:BIGINT|DECIMAL\(38,\s*0\))", re.I
+)
+
+
+def _inline_quantize_sites() -> list[str]:
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        if p.name == "registry.py" and p.parent.name == "queries":
+            continue
+        src = p.read_text()
+        lines = src.splitlines()
+        rel = p.relative_to(PKG.parent)
+        for pat, kind in ((PY_QUANT, "py"), (SQL_QUANT, "sql")):
+            for m in pat.finditer(src):
+                ln = src[:m.start()].count("\n") + 1
+                ctx = "\n".join(lines[max(0, ln - 9):ln])
+                if "decimal-sum-ok" in ctx:
+                    continue
+                seg = " ".join(m.group(0).split())
+                offenders.append(f"{rel}:{ln} [{kind}] {seg[:90]}")
+    return offenders
+
+
+def test_no_inline_exact_sum_pipelines():
+    offenders = _inline_quantize_sites()
+    assert not offenders, (
+        "inline per-row micros/nanos/picos quantize pipelines outside "
+        "queries/registry.py (use exact_sum/sql_exact_sum, or annotate "
+        "decimal-sum-ok: with why the raw units are needed):\n"
+        + "\n".join(offenders)
+    )
+
+
+def test_exact_sum_rejects_unused_combinations():
+    """exact_sum and sql_exact_sum share one validator; the SQL twin
+    exercises it without a Spark session."""
+    import pytest
+
+    from dataintegration_csvprovider_spark.queries.registry import sql_exact_sum
+
+    for kw in (
+        {"scale": 7},
+        {"scale": 12, "mean": True},
+        {"scale": 9, "over": "OVER w"},
+        {"over": "OVER w", "mean": True},
+    ):
+        with pytest.raises(ValueError):
+            sql_exact_sum("x", **kw)

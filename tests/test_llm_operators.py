@@ -698,3 +698,17 @@ def test_dsir_importance_ranks_target_like_docs_higher(spark):
     assert out[1]["mean_lr"] > out[2]["mean_lr"]
     assert out[3]["n_words"] == 0 and out[3]["mean_lr"] is None
     assert out[1]["n_words"] == 5
+
+
+def test_shared_term_count_dtype_at_float32_limit():
+    """float32 counts shared terms exactly only below 2^24; from there
+    the indicator matmul must count in float64 (no Spark needed)."""
+    import numpy as np
+
+    from dataintegration_csvprovider_spark.queries.llm import _shared_term_dtype
+
+    assert _shared_term_dtype(2**24 - 1) is np.float32
+    assert _shared_term_dtype(2**24) is np.float64
+    # the boundary is where float32 stops being exact
+    assert int(np.float32(2**24 - 1)) == 2**24 - 1
+    assert int(np.float32(2**24 + 1)) != 2**24 + 1

@@ -1,5 +1,5 @@
 """Round-12 query law tests: the hybrid retrieval ablation and the
-micros-form dsum/davg helpers (the sf1 cross-engine drift fix)."""
+micros-form exact_sum sum/mean (the sf1 cross-engine drift fix)."""
 
 from __future__ import annotations
 
@@ -51,16 +51,16 @@ def test_hybrid_retrieval_eval_laws(spark, sf_dir):
 def test_dsum_davg_micros_form(spark):
     """The micros-form helpers agree with exact arithmetic, including
     negatives (truncating casts must not diverge on sign)."""
-    from dataintegration_csvprovider_spark.queries.registry import (
-        davg,
-        dsum,
-    )
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     df = spark.createDataFrame(
         [(1.5,), (-2.25,), (3331310.08,), (-0.000001,), (1e9,)],
         "x double",
     )
-    row = df.agg(dsum(F.col("x")).alias("s"), davg(F.col("x")).alias("a")).first()
+    row = df.agg(
+        exact_sum(F.col("x")).alias("s"),
+        exact_sum(F.col("x"), mean=True).alias("a"),
+    ).first()
     expected_sum = (
         1_500_000 - 2_250_000 + 3_331_310_080_000 - 1 + 10**15
     ) / 1e6

@@ -50,44 +50,44 @@ def test_dsum_128bit_no_silent_wrap(spark):
     """The r13 accumulator upgrade: sums past 2^63 micro-units must
     not silently wrap (the pre-r13 LongType sum did). With the
     DECIMAL(38,0) accumulator the sum stays exact."""
-    from dataintegration_csvprovider_spark.queries.registry import dsum
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     # 2000 rows of 9.2e9 -> 1.84e13 total = 1.84e19 micros > 2^63
     df = spark.range(2000).select(F.lit(9.2e9).alias("v"))
-    got = df.agg(dsum(F.col("v")).alias("s")).collect()[0]["s"]
+    got = df.agg(exact_sum(F.col("v")).alias("s")).collect()[0]["s"]
     assert got is not None
     assert math.isclose(got, 2000 * 9.2e9, rel_tol=1e-12), got
 
 
 def test_dsum12_wide_per_row_domain(spark):
-    """dsum12's direct DECIMAL(38,0) path accepts per-row values far
+    """exact_sum's scale-12 DECIMAL(38,0) path accepts per-row values far
     above the old int64 pico bound (9.2e6) — the TF-IDF w*w class."""
-    from dataintegration_csvprovider_spark.queries.registry import dsum12
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     vals = [2.5e9, 1.0e11, -3.75e10, 0.000000000123]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = df.agg(dsum12(F.col("v")).alias("s")).collect()[0]["s"]
+    got = df.agg(exact_sum(F.col("v"), scale=12).alias("s")).collect()[0]["s"]
     want = sum(round(v, 12) for v in vals)
     assert math.isclose(got, want, rel_tol=1e-12), (got, want)
 
 
 def test_dsum12_matches_duckdb_oracle_twin(spark):
-    """Spark dsum12 and DuckDB sql_dsum12 produce the identical double
+    """Spark exact_sum and DuckDB sql_exact_sum at scale 12 produce the identical double
     on the same values (the cross-engine contract, incl. values above
     the old per-row bound)."""
     import duckdb
 
     from dataintegration_csvprovider_spark.queries.registry import (
-        dsum12,
-        sql_dsum12,
+        exact_sum,
+        sql_exact_sum,
     )
 
     vals = [1.5, -2.25, 3.1e8, 9.9e10, 1e-12, -7.000000000001]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = df.agg(dsum12(F.col("v")).alias("s")).collect()[0]["s"]
+    got = df.agg(exact_sum(F.col("v"), scale=12).alias("s")).collect()[0]["s"]
     lst = ", ".join(repr(v) for v in vals)
     want = duckdb.sql(
-        f"SELECT {sql_dsum12('v')} AS s FROM (SELECT unnest([{lst}]) AS v)"
+        f"SELECT {sql_exact_sum('v', scale=12)} AS s FROM (SELECT unnest([{lst}]) AS v)"
     ).fetchone()[0]
     assert got == want, (got, want)
 
@@ -98,11 +98,9 @@ def test_sql_dsum_shared_is_dialect_neutral(spark):
     type)."""
     import duckdb
 
-    from dataintegration_csvprovider_spark.queries.registry import (
-        sql_dsum_shared,
-    )
+    from dataintegration_csvprovider_spark.queries.registry import sql_exact_sum
 
-    expr = sql_dsum_shared("v")
+    expr = sql_exact_sum("v")
     vals = [1.25, 3e9, 4.000001e9, -7.123456e10]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     df.createOrReplaceTempView("shared_vals")

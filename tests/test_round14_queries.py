@@ -2,7 +2,7 @@
 
 Focused tests for operator internals changed this round (the
 optimization brief requires one per changed internal):
-- dsum/davg guard-free 4-way digit split (registry.py)
+- exact_sum guard-free 4-way digit split (registry.py)
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 def _exact_micros_sum(vals) -> float:
     """Reference: quantize each value to 6 dp (DECIMAL(18,6)), sum the
     exact integer micro-units, ONE int->double conversion + ONE IEEE
-    division — the cross-engine contract dsum implements."""
+    division — the cross-engine contract exact_sum implements."""
     total = sum(
         int((Decimal(repr(v)).quantize(Decimal("0.000001"))) * 1_000_000)
         for v in vals
@@ -29,7 +29,7 @@ def test_dsum_4way_digit_split_exact_on_negative_mix(spark):
     """The r14 guard-free 4-way split must stay bit-exact across sign
     changes and 16-bit digit boundaries (values straddling 2^16/2^32/
     2^48 micro-units, negatives, zeros)."""
-    from dataintegration_csvprovider_spark.queries.registry import dsum
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     vals = [
         0.065535,   # m = 65535 (max low digit)
@@ -46,7 +46,7 @@ def test_dsum_4way_digit_split_exact_on_negative_mix(spark):
         -999999999999.5,
     ]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = df.agg(dsum(F.col("v")).alias("s")).collect()[0]["s"]
+    got = df.agg(exact_sum(F.col("v")).alias("s")).collect()[0]["s"]
     want = _exact_micros_sum(vals)
     assert got == want, (got, want)
 
@@ -54,11 +54,11 @@ def test_dsum_4way_digit_split_exact_on_negative_mix(spark):
 def test_dsum_davg_no_raise_path_in_plan(spark):
     """r13 verdict item 2: the split-sum COUNT guard's raise_error
     fired at realistic 100 TB group sizes. The r14 4-way split is
-    guard-free — no conditional, no raise in any dsum/davg plan."""
-    from dataintegration_csvprovider_spark.queries.registry import davg, dsum
+    guard-free — no conditional, no raise in any exact_sum plan."""
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     df = spark.range(10).select((F.col("id") * 1.5).alias("v"))
-    agg = df.agg(dsum(F.col("v")).alias("s"), davg(F.col("v")).alias("a"))
+    agg = df.agg(exact_sum(F.col("v")).alias("s"), exact_sum(F.col("v"), mean=True).alias("a"))
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "raise_error" not in plan, plan
 
@@ -89,7 +89,7 @@ def test_covariance_exact_component_reuse_bit_identical(spark):
     component sums from ONE shared per-dimension aggregation
     (broadcast-joined back) and generates only the upper triangle via
     slice. Both must be bit-identical to the three-pipelines-per-pair
-    form: same dsum12 accumulator over the same multiset of quantized
+    form: same scale-12 exact_sum accumulator over the same multiset of quantized
     values. Reference: exact Decimal arithmetic with the contract's op
     sequence (12-dp quantize, int128 sum, one int->double, /n in
     double)."""
@@ -129,10 +129,10 @@ def test_covariance_exact_component_reuse_bit_identical(spark):
 
 
 def test_davg_matches_exact_mean(spark):
-    from dataintegration_csvprovider_spark.queries.registry import davg
+    from dataintegration_csvprovider_spark.queries.registry import exact_sum
 
     vals = [1.25, -7.5, 3.000001, 1e9, -2.5e8]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = df.agg(davg(F.col("v")).alias("a")).collect()[0]["a"]
+    got = df.agg(exact_sum(F.col("v"), mean=True).alias("a")).collect()[0]["a"]
     want = _exact_micros_sum(vals) / len(vals)
     assert math.isclose(got, want, rel_tol=0, abs_tol=0), (got, want)

@@ -23,7 +23,7 @@ ORACLE_BUDGET = (
     "exists to avoid"
 )
 CLASSIFIED = {
-    "q_embedding_profile": "FIXED mid-sweep (dsum9 9-dp nano quantum "
+    "q_embedding_profile": "FIXED mid-sweep (scale-9 exact_sum nano quantum "
     "for the raw-reported irrational norm sum); re-verified hash-green "
     "at sf1 after the fix",
     "q_semdedup_knn_eval": ORACLE_BUDGET,
