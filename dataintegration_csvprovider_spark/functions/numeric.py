@@ -101,45 +101,15 @@ def culture_number_format(culture: str | None) -> tuple[str, str]:
     return CULTURE_NUMBER_FORMATS.get(culture or "", (".", ","))
 
 
-def render_number(
-    col: Column, culture: str | None = None, grouping: bool = False
-) -> Column:
+def render_number(col: Column, culture: str | None = None) -> Column:
     """T6 — render a numeric column as the reference's job-culture
     formatting would (``string.Format(cultureInfo, "{0}", v)``:
-    culture decimal separator, NO thousands grouping; grouping=True adds
-    the culture's group separator like an explicit "{0:N}" format).
-    Pure Column expressions — cast to string, then a 1:1 separator
-    translate; decimal-typed inputs render exact digits on any engine."""
-    dec, grp = culture_number_format(culture)
-    if grouping:
-        rendered = F.format_number(col.cast("double"), 2)
-        if (dec, grp) != (".", ","):
-            rendered = F.translate(rendered, ".,", dec + grp)
-        return rendered
+    culture decimal separator, NO thousands grouping —
+    CSVDestinationWriter.cs:135). Pure Column expressions — cast to
+    string, then a 1:1 separator translate; decimal-typed inputs render
+    exact digits on any engine."""
+    dec, _ = culture_number_format(culture)
     rendered = col.cast("string")
     if dec != ".":
         rendered = F.translate(rendered, ".", dec)
-    return rendered
-
-
-def format_decimal(
-    col: Column, decimal_separator: str = ".", grouping: bool = False
-) -> Column:
-    """T6 — locale-aware numeric render on write: the reference formats
-    scripted decimal/double/float values with the job culture
-    (ValueFormatter.GetFormattedValue, CSVDestinationWriter.cs:103-107;
-    culture resolution CSVProvider.cs:618-629). The engine renders
-    deterministically from explicit options instead of host culture:
-    invariant '.' by default, ',' for comma-decimal locales, optional
-    thousands grouping."""
-    if grouping:
-        # format_number renders 1,234.57-style with 2 decimals
-        rendered = F.format_number(col.cast("double"), 2)
-        if decimal_separator == ",":
-            # swap separators: 1,234.57 -> 1.234,57
-            rendered = F.translate(rendered, ",.", ".,")
-        return rendered
-    rendered = col.cast("double").cast("string")
-    if decimal_separator == ",":
-        rendered = F.translate(rendered, ".", ",")
     return rendered

@@ -331,15 +331,49 @@ KMV_A = 2654435761
 KMV_B = 1
 KMV_K = 64
 
+#: count-min sketch geometry + Knuth-style arithmetic hash constants —
+#: pure integer arithmetic so BOTH engines can replay the sketch exactly
+#: (xxhash64 has no DuckDB twin; these do). Row 0 is the KMV hash.
+CMS_P = KMV_P
+CMS_W = 64
+CMS_ROWS = ((KMV_A, KMV_B), (2246822519, 7), (3266489917, 31),
+            (668265263, 127))
 
-def kmv_hash_expr(col):
-    """Knuth arithmetic hash into [0, P): decimal(20,0) multiply keeps
-    the product exact far past bigint overflow (CMS convention)."""
+
+def _knuth_hash(col, a: int, b: int):
+    """``(col * a + b) mod P`` as bigint: the decimal(20,0) x
+    decimal(10,0) multiply stays exact far past the bigint-overflow
+    point, so any non-negative bigint id hashes exactly."""
     return F.pmod(
-        col.cast("decimal(20,0)") * F.lit(KMV_A).cast("decimal(10,0)")
-        + F.lit(KMV_B).cast("decimal(10,0)"),
+        col.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
+        + F.lit(b).cast("decimal(10,0)"),
         F.lit(KMV_P).cast("decimal(20,0)"),
     ).cast("bigint")
+
+
+def kmv_hash_expr(col):
+    """Knuth arithmetic hash into [0, P) (row 0 of the CMS hashes)."""
+    return _knuth_hash(col, KMV_A, KMV_B)
+
+
+def cms_cells(col):
+    """Count-min cells of ``col``: a generator column yielding one
+    ``(i int, bucket bigint)`` row per sketch row i, with
+    ``bucket = (col * a_i + b_i) mod P mod W`` — the same arithmetic the
+    DuckDB oracles spell out with HUGEINT."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("i"),
+                    F.pmod(_knuth_hash(col, a, b), F.lit(CMS_W)).alias(
+                        "bucket"
+                    ),
+                )
+                for i, (a, b) in enumerate(CMS_ROWS)
+            ]
+        )
+    )
 
 
 def kmv_sketch(

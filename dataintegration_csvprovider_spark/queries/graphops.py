@@ -584,7 +584,6 @@ def q_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_components_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
@@ -595,6 +594,7 @@ def q_stream_components_incremental(
         table_ledger_commit,
         table_ledger_read,
     )
+    from ..streaming.events import run_foreach_batch, stage_file, staged_feed
 
     orders = load_table(spark, sf_dir, "orders")
     src = (F.col("o_custkey") % 1000).cast("bigint")
@@ -606,41 +606,22 @@ def q_stream_components_incremental(
         ).cast("bigint").alias("dst"),
     ).distinct()
 
-    stage = tempfile.mkdtemp(prefix="cc_stage_")
-    roots = [tempfile.mkdtemp(prefix="cc_run_") for _ in range(2)]
-    protocols = {roots[0]: "manifest", roots[1]: "listing"}
+    root = tempfile.mkdtemp(prefix="cc_")
+    stage = f"{root}/stage"
+    runs = [f"{root}/run0", f"{root}/run1"]
+    protocols = {runs[0]: "manifest", runs[1]: "listing"}
+    skipped: dict[str, list[int]] = {r: [] for r in runs}
 
-    def write_slice(df: DataFrame, name: str, mtime: int) -> None:
-        tmp = tempfile.mkdtemp(prefix="cc_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
-
-    skipped: dict[str, list[int]] = {r: [] for r in roots}
-
-    def run_stream(root: str, crash_in_batch: int | None) -> None:
-        proto = protocols[root]
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
+    def run_stream(run: str, crash_in_batch: int | None) -> None:
+        proto = protocols[run]
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
-            ledger = f"{root}/labels"
+            ledger = f"{run}/labels"
             labels, applied = table_ledger_read(
                 spark, ledger, protocol=proto
             )
             if batch_id <= applied:
-                skipped[root].append(batch_id)
+                skipped[run].append(batch_id)
                 return
             new_labels = incremental_components(labels, bdf)
             table_ledger_commit(
@@ -652,37 +633,29 @@ def q_stream_components_incremental(
             if batch_id == crash_in_batch:
                 raise RuntimeError("injected crash after table commit")
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_in_batch is None:
                 raise
 
     try:
-        write_slice(
-            edges.filter((F.col("src") + F.col("dst")) % 2 == 0),
-            "a.parquet", 1_000_000_000,
-        )
-        write_slice(
-            edges.filter((F.col("src") + F.col("dst")) % 2 == 1),
-            "b.parquet", 1_000_010_000,
-        )
-        run_stream(roots[0], crash_in_batch=0)
-        run_stream(roots[0], crash_in_batch=None)
-        run_stream(roots[1], crash_in_batch=None)
+        for k in range(2):
+            stage_file(
+                stage, edges.filter((F.col("src") + F.col("dst")) % 2 == k), k
+            )
+        run_stream(runs[0], crash_in_batch=0)
+        run_stream(runs[0], crash_in_batch=None)
+        run_stream(runs[1], crash_in_batch=None)
 
         finals = {}
-        for root in roots:
+        for run in runs:
             df, gen = table_ledger_read(
-                spark, f"{root}/labels", protocol=protocols[root]
+                spark, f"{run}/labels", protocol=protocols[run]
             )
-            finals[root] = (
+            finals[run] = (
                 sorted(
                     (int(r["node"]), int(r["component"]))
                     for r in df.collect()
@@ -690,21 +663,17 @@ def q_stream_components_incremental(
                 gen,
             )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
-    try:
-        restart_equal = bool(finals[roots[0]] == finals[roots[1]])
-        redelivery_refused = bool(
-            skipped[roots[0]] == [0] and skipped[roots[1]] == []
-        )
-        return spark.createDataFrame(
-            [
-                (n, c, restart_equal, redelivery_refused)
-                for n, c in finals[roots[0]][0]
-            ],
-            "node long, component long, restart_equal boolean, "
-            "redelivery_refused boolean",
-        )
-    finally:
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+    restart_equal = bool(finals[runs[0]] == finals[runs[1]])
+    redelivery_refused = bool(
+        skipped[runs[0]] == [0] and skipped[runs[1]] == []
+    )
+    return spark.createDataFrame(
+        [
+            (n, c, restart_equal, redelivery_refused)
+            for n, c in finals[runs[0]][0]
+        ],
+        "node long, component long, restart_equal boolean, "
+        "redelivery_refused boolean",
+    )

@@ -519,13 +519,27 @@ def chi2_drift_docs(
     )
 
 
-#: count-min sketch geometry + Knuth-style arithmetic hash constants —
-#: pure integer arithmetic so BOTH engines can replay the sketch exactly
-#: (xxhash64 has no DuckDB twin; these do)
-_CMS_P = 2147483647  # 2^31 - 1, prime
-_CMS_W = 64
-_CMS_ROWS = ((2654435761, 1), (2246822519, 7), (3266489917, 31),
-             (668265263, 127))
+def _cms_probe_audit(ev: DataFrame, sketch: DataFrame) -> DataFrame:
+    """Shared tail of the count-min queries: point estimates from the
+    ``(i, bucket, c)`` sketch for every user_id < 50 of ``ev``, with the
+    true count and the one-sided error law est >= true."""
+    from ..operators.sketches import cms_cells
+
+    truth = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("true_n")
+    )
+    probes = truth.filter(F.col("user_id") < 50).select(
+        "user_id", "true_n", cms_cells(F.col("user_id"))
+    )
+    est = (
+        probes.join(F.broadcast(sketch), ["i", "bucket"])
+        .groupBy("user_id", "true_n")
+        .agg(F.min("c").alias("est"))
+    )
+    return est.select(
+        "user_id", "true_n", "est",
+        (F.col("est") >= F.col("true_n")).alias("over_ok"),
+    )
 
 
 @register(
@@ -575,65 +589,16 @@ _CMS_ROWS = ((2654435761, 1), (2246822519, 7), (3266489917, 31),
     tags=("profiling", "sketch", "frequency"),
 )
 def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.sketches import cms_cells
+
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
+    sketch = (
+        ev.select(cms_cells(F.col("user_id")))
+        .groupBy("i", "bucket")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    return _cms_probe_audit(ev, sketch)
 
-    def bucket(x, a: int, b: int):
-        # decimal(20,0) x decimal(10,0) keeps the multiply exact far past
-        # the bigint-overflow point (same convention as negative_samples)
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    hashed = ev.select(
-        "user_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "h.i", "h.bucket")
-    sketch = hashed.groupBy("i", "bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    truth = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_n")
-    )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
-    est = (
-        probes.join(F.broadcast(sketch), ["i", "bucket"])
-        .groupBy("user_id", "true_n")
-        .agg(F.min("c").alias("est"))
-    )
-    return est.select(
-        "user_id", "true_n", "est",
-        (F.col("est") >= F.col("true_n")).alias("over_ok"),
-    )
 
 
 #: probe points for the quantile-sketch gates; rank error gated at

@@ -95,22 +95,11 @@ def register(
     return deco
 
 
-#: Names surfaced first to the driver's correctness gate (which grades a
-#: 50-name prefix of the registry per round; confirmed 50 in r1-r12).
-#: Round-13 window policy (r12 verdict item 3 + ADVICE accounting fix):
-#: the r12 window actually regraded 40 of the 59 r1-r2-stale names (12
-#: changed names led, so only 38 stale slots remained + 2 stale names
-#: duplicated in the changed block — the earlier "~46 fit" comment
-#: overstated it). The REAL remainder is the 19 names below; they lead
-#: the r13 window so that after this round no name's latest grade is
-#: older than r3. The other 31 slots carry the decimal-sum-migration
-#: names whose value shape changed this round (micros/pico forms); the
-#: remaining ~25 migrated names (values bit-identical at driver SFs,
-#: all re-verified by the local 340-name gate) rotate into r14's
-#: window. The prior round blocks follow for stable ordering (the dict
-#: build dedups; first occurrence wins).
+#: Names surfaced first by :func:`all_queries`, each listed once. Invariant:
+#: the first 50 names are the graded prefix (the external correctness gate
+#: grades the first 50 names of ``queries()``); the rest keep a stable
+#: order. How each window was chosen: BASELINE.md, "Registry grading order".
 _GRADE_FIRST = [
-    # ---- the 19 r1-r2-stale names (regrade them FIRST; verdict item 3)
     "q_stream_static_join",
     "q_stream_stream_join",
     "q_stream_tumbling",
@@ -130,10 +119,7 @@ _GRADE_FIRST = [
     "q_window_rank_dense",
     "q_window_running",
     "q_window_topk_per_group",
-    # ---- round-13 decimal-sum migration: the 31 most value-sensitive
-    # migrated names (quantum or accumulator shape changed on both the
-    # Spark side and the oracle twin)
-    "q_winsorize",  # NULL-proof order-statistic bounds (r12 ADVICE)
+    "q_winsorize",
     "q_corr_decimal",
     "q_sessionize_batch",
     "q_events_hourly",
@@ -164,24 +150,18 @@ _GRADE_FIRST = [
     "q_corr_matrix",
     "q_stream_bm25_index",
     "q_bm25_dedup_eval",
-    # ---- round-12 stale-rotation tail (historical; names already
-    # regraded keep their position for ordering stability)
     "q10_returned_items",
-    "q14_promo_effect",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
-    "q6_forecast_revenue",
     "q_array_agg",
     "q_bucketed_join",
     "q_csv_datetime_format",
     "q_csv_decimal_comma",
-    "q_csv_dialects",
     "q_csv_mapping_pipeline",
     "q_csv_null_sentinel",
     "q_csv_roundtrip",
     "q_date_spine",
-    "q_embedding_centroid",
     "q_embedding_neardup",
     "q_except_all",
     "q_first_last_value",
@@ -198,75 +178,38 @@ _GRADE_FIRST = [
     "q_part_supplier_stats",
     "q_salted_join",
     "q_semijoin",
-    "q_sessionize_batch",
-    "q_sql_recursive_cte",
     "q_sql_window",
     "q_stream_csv_source",
     "q_stream_dedup",
     "q_stream_session",
     "q_stream_sliding",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_tumbling",
-    "q_string_functions",
-    "q_subquery_in",
     "q_subquery_scalar",
-    "q_text_langid",
-    "q_text_normalize",
-    "q_text_quality",
-    "q_topk",
-    "q_topk_per_group_agg",
-    "q_trailing_features",
-    "q_union",
-    "q_unpivot",
-    "q_window_distribution",
-    "q_window_lag_lead",
-    "q_window_range_frame",
-    "q_window_rank_dense",
-    "q_window_running",
-    "q_window_topk_per_group",
-    # ---- round-11 additions / changed code or oracle
     "q_stream_ivf_incremental",
-    "q_bm25_dedup_eval",
     "q_skew_join_planner",
-    "q_stream_bm25_index",
     "q_stream_components_incremental",
-    "q_orc_pushdown",
     "q_classifier_incremental",
     "q_semdedup_knn_eval",
-    "q_quality_classifier",  # logreg SQL builder parametrized (ws-only)
-    "q_threshold_sweep",  # same
-    # ---- round-11 oracle-template speedup: the n-gram builders now
-    # bind the token split once per row — all 14 template users were
-    # verified HASH-IDENTICAL at sf0.001/0.01/0.1 this round (the
-    # change is evaluation-count only), so five representatives
-    # covering the bigram/trigram/cross/composed variants take window
-    # slots here and the other nine sit after the stale block (keeping
-    # >= 30 stale names in the driver's 50-name window, the r10
-    # verdict's rotation target)
+    "q_quality_classifier",
+    "q_threshold_sweep",
     "q_dedup_ngram_jaccard",
     "q_dedup_components",
     "q_dedup_minhash",
     "q_contamination",
     "q_curation_incremental_pruned",
     "q_curation_incremental",
-    "q_pii_redact",  # n_redacted now counts the chain input (ADVICE r10)
-    "q_tfidf_cosine_pairs",  # oracle CTEs MATERIALIZED (headroom item)
-    "q_stream_monitor_suite",  # 2-slice stream (headroom item)
-    # ---- stalest external grades: last driver-graded round 1
+    "q_pii_redact",
+    "q_stream_monitor_suite",
     "q_agg_having",
     "q_agg_stats",
     "q_antijoin",
     "q_argmax_deterministic",
     "q_array_functions",
     "q_asof_join",
-    "q_conditional_agg",
     "q_correlated_exists",
     "q_cross_join",
     "q_cube",
     "q_date_functions",
     "q_distinct",
-    "q_events_hourly",
     "q_except",
     "q_explode_join",
     "q_grouping_sets",
@@ -285,69 +228,6 @@ _GRADE_FIRST = [
     "q_regexp_rewrite",
     "q_rollup",
     "q_scalar_funcs",
-    "q_semijoin",
-    "q_sessionize_batch",
-    "q_string_functions",
-    "q_subquery_in",
-    "q_subquery_scalar",
-    "q_topk",
-    "q_topk_per_group_agg",
-    "q_union",
-    "q_unpivot",
-    "q_window_distribution",
-    "q_window_lag_lead",
-    "q_window_range_frame",
-    "q_window_rank_dense",
-    "q_window_running",
-    "q_window_topk_per_group",
-    # ---- stalest external grades: last driver-graded round 2
-    "q10_returned_items",
-    "q14_promo_effect",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q_array_agg",
-    "q_bucketed_join",
-    "q_csv_datetime_format",
-    "q_csv_decimal_comma",
-    "q_csv_dialects",
-    "q_csv_mapping_pipeline",
-    "q_csv_null_sentinel",
-    "q_csv_roundtrip",
-    "q_date_spine",
-    "q_embedding_centroid",
-    "q_embedding_neardup",
-    "q_except_all",
-    "q_first_last_value",
-    "q_grouped_fit",
-    "q_histogram",
-    "q_intersect_all",
-    "q_jsonl_roundtrip",
-    "q_jsonl_skip_corrupt",
-    "q_knn_bruteforce",
-    "q_lateral_topk",
-    "q_map_column",
-    "q_mode_per_group",
-    "q_null_ordering",
-    "q_part_supplier_stats",
-    "q_salted_join",
-    "q_sql_recursive_cte",
-    "q_sql_window",
-    "q_stream_csv_source",
-    "q_stream_dedup",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_tumbling",
-    "q_text_langid",
-    "q_text_normalize",
-    "q_text_quality",
-    "q_trailing_features",
-    # ---- round-11 template users (rest of the 14; hash-identity
-    # verified at 3 SFs this round — see the representative block at
-    # the top of the window)
     "q_dedup_quality_gate",
     "q_dedup_incremental",
     "q_curation_pipeline",
@@ -357,33 +237,16 @@ _GRADE_FIRST = [
     "q_soft_dedup",
     "q_triangle_count",
     "q_dedup_simhash",
-    # ---- round-10 additions
     "q_pii_audit",
     "q_url_canonicalize",
     "q_robots_filter",
     "q_matryoshka_truncation",
-    "q_threshold_sweep",
     "q_pagerank_incremental",
     "q_mixture_anneal",
-    "q_quality_classifier",
-    "q_curation_incremental_pruned",
-    "q_stream_monitor_suite",
-    # ---- round-10 re-grades (code or oracle changed that round)
-    "q_tfidf_cosine_pairs",
-    "q_dedup_quality_gate",
-    "q_dedup_incremental",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_components",
     "q_dedup_exact",
-    "q_curation_pipeline",
     "q_curation_pipeline_full",
-    "q_curation_keep_best",
-    "q_contrastive_pairs",
-    "q_leakage_safe_split",
     "q_leakage_safe_split_lsh",
     "q_split_lsh_summary",
-    "q_stream_dedup_corpus",
-    "q_soft_dedup",
     "q_chunk_sliding",
     "q_semantic_dedup",
     "q_text_redact",
@@ -391,8 +254,6 @@ _GRADE_FIRST = [
     "q_skew_stats",
     "q_dsir_importance",
     "q_pagerank",
-    "q_triangle_count",
-    "q_corr_decimal",
     "q_listagg",
     "q_skyline",
     "q_parquet_schema_evolution",
@@ -400,48 +261,20 @@ _GRADE_FIRST = [
     "q_kmv_grouped",
     "q_corpus_datacard_full",
     "q_kmv_sketch",
-    "q_dedup_minhash",
     "q_dedup_minhash_full",
-    "q_dedup_simhash",
-    "q_curation_incremental",
     "q_stream_countmin",
     "q_stream_countmin_restart",
     "q_stream_kmv",
     "q_stream_bloom_filter",
-    # ---- round-9 additions
     "q_stream_percentile_restart",
-    "q_kmv_grouped",
     "q_kmv_join_planner",
     "q_ivf_incremental",
-    "q_corpus_datacard_full",
-    "q_stream_countmin_restart",
-    # ---- round-9 re-grades (code/oracle changed this round)
-    "q_dedup_minhash",
-    "q_dedup_minhash_full",
-    "q_dedup_simhash",
-    "q_kmv_sketch",
-    "q_stream_kmv",
-    "q_curation_incremental",
     "q_stream_percentile_monitor",
     "q_stream_quantile_sketch",
-    "q_stream_countmin",
-    "q_stream_bloom_filter",
-    # ---- round-9 re-grades from the budgeted full-registry sf0.1
-    # sweep (tools/check_oracle.py --budget-seconds): two real dyadic-
-    # midpoint divergences fixed (impute total identity, integer EWMA
-    # weights) and four single-fixture constants oracles upgraded to
-    # SUM(n_chars)-keyed pins covering all three SFs
-    "q_impute_group_mean",
     "q_ewma",
     "q_compression_quality",
     "q_bpe_tokenize",
-    "q_split_lsh_summary",
-    "q_stream_dedup_corpus",
-    # ---- round-8 window (all green in CORRECTNESS_r08), stable order
     "q_t_closeness",
-    "q_drift_hellinger",
-    "q_chunk_sliding",
-    "q_bloom_semijoin",
     "q_weighted_median",
     "q_rater_agreement",
     "q_benford_audit",
@@ -457,23 +290,17 @@ _GRADE_FIRST = [
     "q_quantile_sketch",
     "q_quantile_sketch_grouped",
     "q_embedding_neardup_ivf",
-    "q_dedup_quality_gate",
     "q_pca_project",
-    # ---- prior windows (r6 head), retained for stable ordering
     "q_exact_substring_dedup",
     "q_exact_substring_decontaminate",
     "q_stream_decontaminate",
     "q_embedding_covariance",
-    "q_dsir_importance",
     "q_filter_funnel",
-    "q_corpus_datacard",
     "q_corpus_snapshot_diff",
     "q_drift_ks",
     "q_stream_drift_monitor",
     "q_prototype_prune",
-    "q_soft_dedup",
     "q_negative_sampling",
-    "q_contrastive_pairs",
     "q_budget_curation",
     "q_mixture_apportion",
     "q_span_corruption",
@@ -490,19 +317,14 @@ _GRADE_FIRST = [
     "q_personalized_pagerank",
     "q_label_centroid_similarity",
     "q_time_decay_agg",
-    "q_curation_pipeline_full",
     "q_components_zipf_gate",
     "q_bm25_topk",
     "q_rank_fusion",
-    "q_drift_chi2",
     "q_lexical_diversity",
     "q_upsample_epochs",
     "q_interleave_order",
-    "q_position_attribution",
     "q_seasonal_anomaly",
     "q_bm25_batch",
-    "q_rolling_corr",
-    "q_last_touch_attribution",
 ]
 
 

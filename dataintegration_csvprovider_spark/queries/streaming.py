@@ -1,24 +1,31 @@
 """Structured Streaming queries (SURVEY.md §2.8) over the ``events``
 fixture. Each runs a real streaming query (file source → watermarked
-windows → memory sink) to completion with an availableNow trigger, then
-returns the materialized batch result — deterministic, so the tumbling /
+windows → memory or file sink) to completion with an availableNow trigger
+through the harness in streaming/events.py, then returns the
+materialized batch result — deterministic, so the tumbling /
 sliding / session aggregations carry full SQL oracles (gaps-and-islands
 for sessions); only semantics DuckDB can't express stay rows-only.
 """
 
 from __future__ import annotations
 
-import os
+import shutil
+import tempfile
 
+from pyspark.errors.exceptions.captured import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.sketches import cms_cells
 from ..streaming.events import (
     dedup_within_watermark,
+    run_foreach_batch,
     run_to_completion,
     session_agg,
     sliding_agg,
+    stage_file,
+    staged_feed,
     stream_from_parquet,
     tumbling_agg,
 )
@@ -44,8 +51,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage events into a microsecond-timestamp parquet landing dir (the
     fixture's TIMESTAMP(NANOS) isn't streamable) and open a file-source
     stream over it."""
-    import tempfile
-
     if sf_dir not in _STAGED:
         # withWatermark requires TIMESTAMP (LTZ); parquet NTZ inference can
         # hand back TIMESTAMP_NTZ depending on writer metadata, so pin the
@@ -347,8 +352,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "csv"),
 )
 def q_stream_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sinks.csv_sink import CsvSink
     from ..sources.csv_source import CsvSource
     from ..streaming.events import stream_from_csv_source
@@ -357,20 +360,24 @@ def q_stream_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") < 1000
     )
     d = tempfile.mkdtemp(prefix="stream_csv_")
-    CsvSink(folder=d).write(
-        events.select(
-            F.col("ts").cast("string").alias("ts"), "event_type", "value"
-        ),
-        "events",
-    )
-    src = CsvSource(folder=d)
-    stream = stream_from_csv_source(spark, src, "events").select(
-        F.col("ts").try_cast("timestamp").alias("ts"),
-        "event_type",
-        F.col("value").try_cast("double").alias("value"),
-    )
-    agg = tumbling_agg(stream, window="1 hour", group_cols=("event_type",))
-    out = run_to_completion(agg, output_mode="complete")
+    try:
+        CsvSink(folder=d).write(
+            events.select(
+                F.col("ts").cast("string").alias("ts"), "event_type", "value"
+            ),
+            "events",
+        )
+        src = CsvSource(folder=d)
+        stream = stream_from_csv_source(spark, src, "events").select(
+            F.col("ts").try_cast("timestamp").alias("ts"),
+            "event_type",
+            F.col("value").try_cast("double").alias("value"),
+        )
+        agg = tumbling_agg(stream, window="1 hour", group_cols=("event_type",))
+        # complete mode: the result lives in the memory sink, not in d
+        out = run_to_completion(agg, output_mode="complete")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
     return out.select(
         F.date_format("window.start", _TS_FMT_SPARK).alias("win_start"),
         "event_type",
@@ -472,34 +479,32 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc"),
 )
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.events import stream_upsert_state
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    stage = tempfile.mkdtemp(prefix="upsert_stage_")
-    # microsecond timestamps for streamability; 4 files -> 4 micro-batches
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(stage).schema
-    feed = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(stage)
-    )
-    state = stream_upsert_state(
-        feed,
-        state_dir=tempfile.mkdtemp(prefix="upsert_state_") + "/state",
-        checkpoint_dir=tempfile.mkdtemp(prefix="upsert_ck_"),
-    )
-    # 'error' rows are delete tombstones: kept in state, filtered at read
-    return state.filter(F.col("event_type") != "error").select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-    )
+    root = tempfile.mkdtemp(prefix="upsert_")
+    try:
+        # microsecond timestamps for streamability; 4 files -> 4 micro-batches
+        events.repartition(4).write.mode("overwrite").parquet(f"{root}/stage")
+        state = stream_upsert_state(
+            staged_feed(spark, f"{root}/stage"),
+            state_dir=f"{root}/state",
+            checkpoint_dir=f"{root}/ck",
+        )
+        # 'error' rows are delete tombstones: kept in state, filtered at read
+        return (
+            state.filter(F.col("event_type") != "error")
+            .select(
+                "user_id",
+                F.col("event_type").alias("last_event_type"),
+                F.col("value").alias("last_value"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -566,54 +571,43 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "checkpoint"),
 )
 def q_stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    stage = tempfile.mkdtemp(prefix="eo_stage_")
-    ledger = tempfile.mkdtemp(prefix="eo_ledger_") + "/parts"
-    ck = tempfile.mkdtemp(prefix="eo_ck_")
+    root = tempfile.mkdtemp(prefix="eo_")
+    stage, ledger = f"{root}/stage", f"{root}/ledger"
 
-    ev.filter(F.col("user_id") < 50).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    schema = spark.read.parquet(stage).schema
+    def append_partials(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .write.mode("append")
+            .parquet(ledger)
+        )
 
     def run_once() -> None:
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
+        run_foreach_batch(
+            staged_feed(spark, stage), append_partials, f"{root}/ck"
         )
 
-        def append_partials(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("append")
-                .parquet(ledger)
-            )
-
-        q = (
-            feed.writeStream.foreachBatch(append_partials)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    try:
+        ev.filter(F.col("user_id") < 50).repartition(2).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        run_once()  # initial backlog
+        run_once()  # restart with nothing new: must be a no-op
+        # a late file lands, then another restart picks up ONLY that file
+        ev.filter(
+            (F.col("user_id") >= 50) & (F.col("user_id") < 60)
+        ).coalesce(1).write.mode("append").parquet(stage)
+        run_once()
+        return (
+            spark.read.parquet(ledger)
+            .groupBy("user_id")
+            .agg(F.sum("n").cast("bigint").alias("n_events"))
+            .localCheckpoint(eager=True)
         )
-        q.awaitTermination()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
-    run_once()  # initial backlog
-    run_once()  # restart with nothing new: must be a no-op
-    # a late file lands, then another restart picks up ONLY that file
-    ev.filter((F.col("user_id") >= 50) & (F.col("user_id") < 60)).coalesce(
-        1
-    ).write.mode("append").parquet(stage)
-    run_once()
-
-    return (
-        spark.read.parquet(ledger)
-        .groupBy("user_id")
-        .agg(F.sum("n").cast("bigint").alias("n_events"))
-    )
 
 
 @register(
@@ -637,53 +631,45 @@ def q_stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "source", "datasource"),
 )
 def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources import pyds
 
     pyds.register_stream(spark)
-    ledger = tempfile.mkdtemp(prefix="pysrc_ledger_") + "/parts"
-    ck = tempfile.mkdtemp(prefix="pysrc_ck_")
+    root = tempfile.mkdtemp(prefix="pysrc_")
+    ledger = f"{root}/ledger"
 
-    def run_once() -> None:
-        feed = (
-            spark.readStream.format("seqstream")
-            .option("n", 100)
-            .option("batch", 40)
-            .load()
-        )
-
-        def append(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    # bounded-sum: fixed 100-row synthetic stream
-                    F.sum(F.col("x").cast("decimal(18,6)")).alias("sx"),
-                )
-                .write.mode("append")
-                .parquet(ledger)
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                # bounded-sum: fixed 100-row synthetic stream
+                F.sum(F.col("x").cast("decimal(18,6)")).alias("sx"),
             )
-
-        q = (
-            feed.writeStream.foreachBatch(append)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .write.mode("append")
+            .parquet(ledger)
         )
-        q.awaitTermination()
 
-    for _ in range(4):  # 3 batches of data + one provably-idle restart
-        run_once()
-
-    return (
-        spark.read.parquet(ledger)
-        .groupBy("bucket")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sx").cast("double").alias("total_x"),
+    try:
+        for _ in range(4):  # 3 batches of data + one provably-idle restart
+            feed = (
+                spark.readStream.format("seqstream")
+                .option("n", 100)
+                .option("batch", 40)
+                .load()
+            )
+            run_foreach_batch(feed, append, f"{root}/ck")
+        return (
+            spark.read.parquet(ledger)
+            .groupBy("bucket")
+            .agg(
+                F.sum("n").cast("bigint").alias("n"),
+                F.sum("sx").cast("double").alias("total_x"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
 
 
 @register(
@@ -712,83 +698,50 @@ def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark"),
 )
 def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="late_stage_")
-    ck = tempfile.mkdtemp(prefix="late_ck_")
-
-    def write_file(rows: list[str], name: str, mtime: int) -> None:
-        df = spark.createDataFrame(
-            [(r,) for r in rows], "ts_str string"
+    def rows(*ts: str) -> DataFrame:
+        return spark.createDataFrame(
+            [(t,) for t in ts], "ts_str string"
         ).select(F.col("ts_str").cast("timestamp").alias("ts"))
-        tmp = tempfile.mkdtemp(prefix="late_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = os.path.join(stage, name)
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
 
+    root = tempfile.mkdtemp(prefix="late_")
+    stage = f"{root}/stage"
     try:
         # batch 1: two 00:xx rows, one 01:xx row, and a 05:00 sentinel
         # that advances the watermark to 04:00 for the NEXT batch
-        write_file(
-            [
+        stage_file(
+            stage,
+            rows(
                 "2024-03-01 00:10:00",
                 "2024-03-01 00:20:00",
                 "2024-03-01 01:15:00",
                 "2024-03-01 05:00:00",
-            ],
-            "a.parquet",
-            1_000_000_000,
+            ),
+            0,
         )
         # batch 2 (spacer): one on-time row; its real purpose is to let
         # the 04:00 watermark computed from batch 1 become the operative
         # filter value (watermark activation lags one batch)
-        write_file(["2024-03-01 05:10:00"], "b_spacer.parquet", 1_000_010_000)
+        stage_file(stage, rows("2024-03-01 05:10:00"), 1)
         # batch 3: a LATE 00:30 row (< 04:00 watermark -> dropped), an
         # on-time 05:30 row, and a 23:00 sentinel that closes every
         # window up to 22:00
-        write_file(
-            [
+        stage_file(
+            stage,
+            rows(
                 "2024-03-01 00:30:00",
                 "2024-03-01 05:30:00",
                 "2024-03-01 23:00:00",
-            ],
-            "c.parquet",
-            1_000_020_000,
-        )
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+            ),
+            2,
         )
         agg = (
-            feed.withWatermark("ts", "1 hour")
+            staged_feed(spark, stage)
+            .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        import uuid as _uuid
-
-        name = f"late_{_uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
-            spark.table(name)
+            run_to_completion(agg, "append")
             .select(
                 F.date_format("window.start", _TS_FMT_SPARK).alias(
                     "win_start"
@@ -798,8 +751,8 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
+
 
 
 @register(
@@ -928,9 +881,6 @@ def _stream_minhash_perm_values() -> str:
     tags=("streaming", "dedup"),
 )
 def q_stream_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (
         _with_content,
         minhash_signatures,
@@ -1023,9 +973,6 @@ def q_stream_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "contamination", "substring"),
 )
 def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from ..operators.dedup import (
@@ -1117,13 +1064,9 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink", "text"),
 )
 def q_stream_training_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    d_in = tempfile.mkdtemp(prefix="ingest_src_")
-    d_out = tempfile.mkdtemp(prefix="ingest_shards_")
-    d_ckpt = tempfile.mkdtemp(prefix="ingest_ckpt_")
+    root = tempfile.mkdtemp(prefix="ingest_")
+    d_in, d_out = f"{root}/src", f"{root}/shards"
     try:
         docs.write.mode("overwrite").parquet(d_in)
         stream = stream_from_parquet(spark, d_in, docs.schema)
@@ -1140,13 +1083,7 @@ def q_stream_training_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         def write_batch(bdf: DataFrame, _batch_id: int) -> None:
             bdf.write.mode("append").partitionBy("shard_id").parquet(d_out)
 
-        q = (
-            clean.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", d_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_foreach_batch(clean, write_batch, f"{root}/ck")
         written = spark.read.parquet(d_out)
         manifest = (
             written.groupBy(F.col("shard_id").cast("int").alias("shard_id"))
@@ -1159,9 +1096,7 @@ def q_stream_training_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(d_in, ignore_errors=True)
-        shutil.rmtree(d_out, ignore_errors=True)
-        shutil.rmtree(d_ckpt, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     return manifest
 
 
@@ -1220,62 +1155,30 @@ def _ks_sql(sample_pred: str, ref_pred: str) -> str:
     tags=("streaming", "drift", "profiling"),
 )
 def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.scale import ks_two_sample
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     ref = ev.filter(F.col("event_id") % 4 == 0).select("value").persist()
-    stage = tempfile.mkdtemp(prefix="drift_stage_")
-    ck = tempfile.mkdtemp(prefix="drift_ck_")
-
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 4 == k + 1).select("value")
-        tmp = tempfile.mkdtemp(prefix="drift_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
-
+    root = tempfile.mkdtemp(prefix="drift_")
     ledger: list[tuple[int, int, float]] = []
+
+    def score_batch(bdf: DataFrame, batch_id: int) -> None:
+        r = ks_two_sample(bdf, ref, "value").collect()[0]
+        ledger.append((int(batch_id), int(r["n_a"]), float(r["ks_stat"])))
+
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+        for k in range(3):
+            stage_file(
+                f"{root}/stage",
+                ev.filter(F.col("event_id") % 4 == k + 1).select("value"),
+                k,
+            )
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), score_batch, f"{root}/ck"
         )
-
-        def score_batch(bdf: DataFrame, batch_id: int) -> None:
-            r = ks_two_sample(bdf, ref, "value").collect()[0]
-            ledger.append((int(batch_id), int(r["n_a"]), float(r["ks_stat"])))
-
-        q = (
-            feed.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     finally:
         ref.unpersist()
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         ledger, "batch int, n_batch bigint, ks_stat double"
     )
@@ -1331,143 +1234,58 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sketch", "frequency"),
 )
 def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
+    from .profiling import _cms_probe_audit
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
-    stage = tempfile.mkdtemp(prefix="cms_stage_")
-    ck = tempfile.mkdtemp(prefix="cms_ck_")
-    ledger_root = tempfile.mkdtemp(prefix="cms_ledger_")
-    ledger_dir = ledger_root + "/ledger"
+    root = tempfile.mkdtemp(prefix="cms_")
+    ledger_dir = f"{root}/ledger"
     _CMS_LEDGER_SCHEMA = "i int, bucket bigint, c bigint"
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
 
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
+    def merge_batch(bdf: DataFrame, batch_id: int) -> None:
+        # per-batch sketch is <= 256 rows — the bounded artifact;
+        # cell-wise addition is the CMS merge operation. Addition
+        # is NOT idempotent, so the persisted ledger's batch-id
+        # generation check is what makes re-delivery safe.
+        prev, applied = rows_ledger_read(spark, ledger_dir)
+        if batch_id <= applied:
+            return
+        state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
+                 for r in prev}
+        for r in (
+            bdf.select(cms_cells(F.col("user_id")))
+            .groupBy("i", "bucket").count().collect()
+        ):
+            key = (int(r["i"]), int(r["bucket"]))
+            state[key] = state.get(key, 0) + int(r["count"])
+        rows_ledger_commit(
+            spark, ledger_dir,
+            [(i, b, c) for (i, b), c in sorted(state.items())],
+            _CMS_LEDGER_SCHEMA, batch_id, applied_through=applied,
         )
-
-    def hashed(df: DataFrame) -> DataFrame:
-        return df.select(
-            "user_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h"),
-        ).select("h.i", "h.bucket")
-
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 3 == k).select("user_id")
-        tmp = tempfile.mkdtemp(prefix="cms_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-
-        def merge_batch(bdf: DataFrame, batch_id: int) -> None:
-            # per-batch sketch is <= 256 rows — the bounded artifact;
-            # cell-wise addition is the CMS merge operation. Addition
-            # is NOT idempotent, so the persisted ledger's batch-id
-            # generation check is what makes re-delivery safe.
-            prev, applied = rows_ledger_read(spark, ledger_dir)
-            if batch_id <= applied:
-                return
-            state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
-                     for r in prev}
-            for r in (
-                hashed(bdf).groupBy("i", "bucket").count().collect()
-            ):
-                key = (int(r["i"]), int(r["bucket"]))
-                state[key] = state.get(key, 0) + int(r["count"])
-            rows_ledger_commit(
-                spark, ledger_dir,
-                [(i, b, c) for (i, b), c in sorted(state.items())],
-                _CMS_LEDGER_SCHEMA, batch_id, applied_through=applied,
+        for k in range(3):
+            stage_file(
+                f"{root}/stage",
+                ev.filter(F.col("event_id") % 3 == k).select("user_id"),
+                k,
             )
-
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), merge_batch, f"{root}/ck"
         )
-        q.awaitTermination()
         final_rows, _ = rows_ledger_read(spark, ledger_dir)
         merged = {
             (int(r["i"]), int(r["bucket"])): int(r["c"]) for r in final_rows
         }
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(ledger_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     sketch = spark.createDataFrame(
         [(i, b, c) for (i, b), c in sorted(merged.items())],
         "i int, bucket bigint, c bigint",
     )
-    truth = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_n")
-    )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
-    est = (
-        probes.join(F.broadcast(sketch), ["i", "bucket"])
-        .groupBy("user_id", "true_n")
-        .agg(F.min("c").alias("est"))
-    )
-    return est.select(
-        "user_id", "true_n", "est",
-        (F.col("est") >= F.col("true_n")).alias("over_ok"),
-    )
+    return _cms_probe_audit(ev, sketch)
+
 
 
 @register(
@@ -1527,72 +1345,17 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sketch", "checkpoint"),
 )
 def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
+    from .profiling import _cms_probe_audit
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
-    stage = tempfile.mkdtemp(prefix="cmsr_stage_")
-    roots = [tempfile.mkdtemp(prefix="cmsr_run_") for _ in range(2)]
+    root = tempfile.mkdtemp(prefix="cmsr_")
+    stage = f"{root}/stage"
     schema_str = "i int, bucket bigint, c bigint"
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
-
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    def hashed(df: DataFrame) -> DataFrame:
-        return df.select(
-            "user_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h"),
-        ).select("h.i", "h.bucket")
-
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 3 == k).select("user_id")
-        tmp = tempfile.mkdtemp(prefix="cmsr_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
-
     skipped_batches: list[int] = []
 
-    def run_stream(root: str, crash_after_batch: int | None) -> None:
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-        ledger_dir = f"{root}/ledger"
+    def run_stream(run: str, crash_after_batch: int | None) -> None:
+        ledger_dir = f"{run}/ledger"
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
             prev, applied = rows_ledger_read(spark, ledger_dir)
@@ -1602,7 +1365,8 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
                      for r in prev}
             for r in (
-                hashed(bdf).groupBy("i", "bucket").count().collect()
+                bdf.select(cms_cells(F.col("user_id")))
+                .groupBy("i", "bucket").count().collect()
             ):
                 key = (int(r["i"]), int(r["bucket"]))
                 state[key] = state.get(key, 0) + int(r["count"])
@@ -1614,34 +1378,29 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             if batch_id == crash_after_batch:
                 raise RuntimeError("injected crash after ledger commit")
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_after_batch is None:
                 raise
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        run_stream(roots[0], crash_after_batch=1)
-        run_stream(roots[0], crash_after_batch=None)
-        run_stream(roots[1], crash_after_batch=None)
-        rows_a, gen_a = rows_ledger_read(spark, f"{roots[0]}/ledger")
-        rows_b, gen_b = rows_ledger_read(spark, f"{roots[1]}/ledger")
+        for k in range(3):
+            stage_file(
+                stage,
+                ev.filter(F.col("event_id") % 3 == k).select("user_id"),
+                k,
+            )
+        run0, run1 = f"{root}/run0", f"{root}/run1"
+        run_stream(run0, crash_after_batch=1)
+        run_stream(run0, crash_after_batch=None)
+        run_stream(run1, crash_after_batch=None)
+        rows_a, gen_a = rows_ledger_read(spark, f"{run0}/ledger")
+        rows_b, gen_b = rows_ledger_read(spark, f"{run1}/ledger")
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     cells_a = {(int(r["i"]), int(r["bucket"])): int(r["c"]) for r in rows_a}
     cells_b = {(int(r["i"]), int(r["bucket"])): int(r["c"]) for r in rows_b}
@@ -1651,35 +1410,12 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = spark.createDataFrame(
         [(i, b, c) for (i, b), c in sorted(cells_a.items())], schema_str
     )
-    truth = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_n")
-    )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
-    est = (
-        probes.join(F.broadcast(sketch), ["i", "bucket"])
-        .groupBy("user_id", "true_n")
-        .agg(F.min("c").alias("est"))
-    )
-    return est.select(
-        "user_id", "true_n", "est",
-        (F.col("est") >= F.col("true_n")).alias("over_ok"),
+    return _cms_probe_audit(ev, sketch).select(
+        "*",
         F.lit(bool(restart_equal)).alias("restart_equal"),
         F.lit(bool(redelivery_ok)).alias("redelivery_skipped"),
     )
+
 
 
 @register(
@@ -1716,9 +1452,6 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sketch", "quantile"),
 )
 def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketches import (
         collect_sketch,
         quantile_sketch_rows,
@@ -1730,66 +1463,35 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("value").cast("double").alias("value")
     ).filter(F.col("value").isNotNull())
-    stage = tempfile.mkdtemp(prefix="qsk_stage_")
-    ck = tempfile.mkdtemp(prefix="qsk_ck_")
-    ledger_root = tempfile.mkdtemp(prefix="qsk_ledger_")
-    ledger_dir = ledger_root + "/ledger"
+    root = tempfile.mkdtemp(prefix="qsk_")
+    ledger_dir = f"{root}/ledger"
 
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 3 == k).select("value")
-        tmp = tempfile.mkdtemp(prefix="qsk_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
+    def merge_batch(bdf, batch_id: int) -> None:
+        # per-batch sketch is <= k*levels rows — the bounded
+        # artifact; collapse-merge is the sketch's + operation,
+        # persisted as an idempotent batch-id generation commit
+        # (restart = re-merge from the ledger, never raw history)
+        batch_sketch = collect_sketch(
+            quantile_sketch_rows(bdf, "value")
         )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
+        sketch_ledger_apply(
+            spark, ledger_dir, {"all": batch_sketch}, batch_id
+        )
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-
-        def merge_batch(bdf, batch_id: int) -> None:
-            # per-batch sketch is <= k*levels rows — the bounded
-            # artifact; collapse-merge is the sketch's + operation,
-            # persisted as an idempotent batch-id generation commit
-            # (restart = re-merge from the ledger, never raw history)
-            batch_sketch = collect_sketch(
-                quantile_sketch_rows(bdf, "value")
+        for k in range(3):
+            stage_file(
+                f"{root}/stage",
+                ev.filter(F.col("event_id") % 3 == k).select("value"),
+                k,
             )
-            sketch_ledger_apply(
-                spark, ledger_dir, {"all": batch_sketch}, batch_id
-            )
-
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), merge_batch, f"{root}/ck"
         )
-        q.awaitTermination()
         state, _ = sketch_ledger_read(spark, ledger_dir)
         merged = state.get("all", {})
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(ledger_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     return _mrl_rank_audit(ev.select("value"), merged)
 
 
@@ -1827,9 +1529,6 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sketch", "quantile", "monitor"),
 )
 def q_stream_percentile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketches import (
         collect_grouped_sketch,
         grouped_quantile_sketch_rows,
@@ -1848,62 +1547,31 @@ def q_stream_percentile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("value").cast("double").alias("value"),
     ).filter(F.col("value").isNotNull())
-    stage = tempfile.mkdtemp(prefix="pmon_stage_")
-    ck = tempfile.mkdtemp(prefix="pmon_ck_")
-    ledger_root = tempfile.mkdtemp(prefix="pmon_ledger_")
-    ledger_dir = ledger_root + "/ledger"
+    root = tempfile.mkdtemp(prefix="pmon_")
+    ledger_dir = f"{root}/ledger"
 
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 3 == k).select("win", "value")
-        tmp = tempfile.mkdtemp(prefix="pmon_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
+    def merge_batch(bdf, batch_id: int) -> None:
+        # per-batch per-window sketches: the bounded artifact the
+        # ledger ingests; collapse-merge is the + of the monitor,
+        # persisted as an idempotent batch-id generation commit
+        batch_sketches = collect_grouped_sketch(
+            grouped_quantile_sketch_rows(bdf, "win", "value")
         )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
+        sketch_ledger_apply(spark, ledger_dir, batch_sketches, batch_id)
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-
-        def merge_batch(bdf, batch_id: int) -> None:
-            # per-batch per-window sketches: the bounded artifact the
-            # ledger ingests; collapse-merge is the + of the monitor,
-            # persisted as an idempotent batch-id generation commit
-            batch_sketches = collect_grouped_sketch(
-                grouped_quantile_sketch_rows(bdf, "win", "value")
+        for k in range(3):
+            stage_file(
+                f"{root}/stage",
+                ev.filter(F.col("event_id") % 3 == k).select("win", "value"),
+                k,
             )
-            sketch_ledger_apply(spark, ledger_dir, batch_sketches, batch_id)
-
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), merge_batch, f"{root}/ck"
         )
-        q.awaitTermination()
         ledger, _ = sketch_ledger_read(spark, ledger_dir)
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(ledger_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     # audit: broadcast the (win, q, est) probe table, one join + one
     # grouped aggregate over the raw stream data
@@ -1984,11 +1652,6 @@ def q_stream_percentile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_percentile_restart(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from ..operators.sketches import (
         collect_grouped_sketch,
         grouped_quantile_sketch_rows,
@@ -2007,35 +1670,12 @@ def q_stream_percentile_restart(
         ),
         F.col("value").cast("double").alias("value"),
     ).filter(F.col("value").isNotNull())
-    stage = tempfile.mkdtemp(prefix="prst_stage_")
-    roots = [tempfile.mkdtemp(prefix="prst_run_") for _ in range(2)]
-
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = ev.filter(F.col("event_id") % 3 == k).select("win", "value")
-        tmp = tempfile.mkdtemp(prefix="prst_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
-
+    root = tempfile.mkdtemp(prefix="prst_")
+    stage = f"{root}/stage"
     skipped_batches: list[int] = []
 
-    def run_stream(root: str, crash_after_batch: int | None) -> None:
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-        ledger_dir = f"{root}/ledger"
+    def run_stream(run: str, crash_after_batch: int | None) -> None:
+        ledger_dir = f"{run}/ledger"
 
         def merge_batch(bdf, batch_id: int) -> None:
             batch_sketches = collect_grouped_sketch(
@@ -2051,36 +1691,31 @@ def q_stream_percentile_restart(
             if applied and batch_id == crash_after_batch:
                 raise RuntimeError("injected crash after ledger commit")
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_after_batch is None:
                 raise  # only the injected crash is expected
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
+        for k in range(3):
+            stage_file(
+                stage,
+                ev.filter(F.col("event_id") % 3 == k).select("win", "value"),
+                k,
+            )
+        run0, run1 = f"{root}/run0", f"{root}/run1"
         # crashed run + restart from the same checkpoint
-        run_stream(roots[0], crash_after_batch=1)
-        run_stream(roots[0], crash_after_batch=None)
+        run_stream(run0, crash_after_batch=1)
+        run_stream(run0, crash_after_batch=None)
         # uninterrupted control
-        run_stream(roots[1], crash_after_batch=None)
-        restarted, gen_a = sketch_ledger_read(spark, f"{roots[0]}/ledger")
-        control, gen_b = sketch_ledger_read(spark, f"{roots[1]}/ledger")
+        run_stream(run1, crash_after_batch=None)
+        restarted, gen_a = sketch_ledger_read(spark, f"{run0}/ledger")
+        control, gen_b = sketch_ledger_read(spark, f"{run1}/ledger")
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     # exactly one skipped re-delivery, and it was the crashed batch;
     # both ledgers applied through the final batch id
@@ -2167,9 +1802,6 @@ def q_stream_percentile_restart(
     tags=("streaming", "sketch", "distinct"),
 )
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketches import (
         KMV_K,
         KMV_P,
@@ -2182,75 +1814,44 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_custkey").alias("key")
     )
-    stage = tempfile.mkdtemp(prefix="kmv_stage_")
-    ck = tempfile.mkdtemp(prefix="kmv_ck_")
-    ledger_root = tempfile.mkdtemp(prefix="kmv_ledger_")
-    ledger_dir = ledger_root + "/ledger"
+    root = tempfile.mkdtemp(prefix="kmv_")
+    ledger_dir = f"{root}/ledger"
 
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        df = orders.filter(F.col("o_orderkey") % 3 == k).select("key")
-        tmp = tempfile.mkdtemp(prefix="kmv_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
+    def merge_batch(bdf, batch_id: int) -> None:
+        # persisted generation ledger (rows: the k smallest hashes
+        # plus one 'n' row carrying the union's distinct-hash
+        # count) — restart = re-merge, re-delivery skipped
+        prev, applied = rows_ledger_read(spark, ledger_dir)
+        if batch_id <= applied:
+            return
+        state = (
+            sorted(int(r["v"]) for r in prev if r["kind"] == "h"),
+            next((int(r["v"]) for r in prev if r["kind"] == "n"), 0),
         )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
+        vals, n = kmv_merge([state, kmv_sketch(bdf, "key")])
+        rows_ledger_commit(
+            spark, ledger_dir,
+            [("h", v) for v in vals] + [("n", n)],
+            "kind string, v long", batch_id, applied_through=applied,
+        )
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-
-        def merge_batch(bdf, batch_id: int) -> None:
-            # persisted generation ledger (rows: the k smallest hashes
-            # plus one 'n' row carrying the union's distinct-hash
-            # count) — restart = re-merge, re-delivery skipped
-            prev, applied = rows_ledger_read(spark, ledger_dir)
-            if batch_id <= applied:
-                return
-            state = (
-                sorted(int(r["v"]) for r in prev if r["kind"] == "h"),
-                next((int(r["v"]) for r in prev if r["kind"] == "n"), 0),
+        for k in range(3):
+            stage_file(
+                f"{root}/stage",
+                orders.filter(F.col("o_orderkey") % 3 == k).select("key"),
+                k,
             )
-            vals, n = kmv_merge([state, kmv_sketch(bdf, "key")])
-            rows_ledger_commit(
-                spark, ledger_dir,
-                [("h", v) for v in vals] + [("n", n)],
-                "kind string, v long", batch_id, applied_through=applied,
-            )
-
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), merge_batch, f"{root}/ck"
         )
-        q.awaitTermination()
         final_rows, _ = rows_ledger_read(spark, ledger_dir)
         merged = (
             sorted(int(r["v"]) for r in final_rows if r["kind"] == "h"),
             next((int(r["v"]) for r in final_rows if r["kind"] == "n"), 0),
         )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(ledger_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     # null keys excluded on both engines (kmv_sketch drops null hashes;
     # the oracle's key CTE now pins the same convention)
@@ -2299,9 +1900,6 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "bloom"),
 )
 def q_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.scale import bloom_words
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
     from .relational6 import bloom_audit_frame
@@ -2315,69 +1913,38 @@ def q_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    stage = tempfile.mkdtemp(prefix="bloom_stage_")
-    ck = tempfile.mkdtemp(prefix="bloom_ck_")
-    ledger_root = tempfile.mkdtemp(prefix="bloom_ledger_")
-    ledger_dir = ledger_root + "/ledger"
+    root = tempfile.mkdtemp(prefix="bloom_")
+    ledger_dir = f"{root}/ledger"
 
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        df = dim.filter(F.col("c_custkey") % 3 == k)
-        tmp = tempfile.mkdtemp(prefix="bloom_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
+    def merge_batch(bdf: DataFrame, batch_id: int) -> None:
+        # per-batch word table is <= m/32 rows — the bounded
+        # artifact; bitwise OR is the Bloom merge operation (OR is
+        # idempotent, but the persisted generation ledger still
+        # carries the crash-safety and restart = re-merge story)
+        prev, applied = rows_ledger_read(spark, ledger_dir)
+        if batch_id <= applied:
+            return
+        state = {int(r["word"]): int(r["w"]) for r in prev}
+        for r in bloom_words(bdf, "c_custkey", m_bits).collect():
+            w = int(r["word"])
+            state[w] = state.get(w, 0) | int(r["w"])
+        rows_ledger_commit(
+            spark, ledger_dir, sorted(state.items()),
+            "word long, w long", batch_id, applied_through=applied,
         )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
 
     try:
-        for k, (name, mt) in enumerate(
-            (("a.parquet", 1_000_000_000),
-             ("b.parquet", 1_000_010_000),
-             ("c.parquet", 1_000_020_000))
-        ):
-            write_slice(k, name, mt)
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
-
-        def merge_batch(bdf: DataFrame, batch_id: int) -> None:
-            # per-batch word table is <= m/32 rows — the bounded
-            # artifact; bitwise OR is the Bloom merge operation (OR is
-            # idempotent, but the persisted generation ledger still
-            # carries the crash-safety and restart = re-merge story)
-            prev, applied = rows_ledger_read(spark, ledger_dir)
-            if batch_id <= applied:
-                return
-            state = {int(r["word"]): int(r["w"]) for r in prev}
-            for r in bloom_words(bdf, "c_custkey", m_bits).collect():
-                w = int(r["word"])
-                state[w] = state.get(w, 0) | int(r["w"])
-            rows_ledger_commit(
-                spark, ledger_dir, sorted(state.items()),
-                "word long, w long", batch_id, applied_through=applied,
+        for k in range(3):
+            stage_file(
+                f"{root}/stage", dim.filter(F.col("c_custkey") % 3 == k), k
             )
-
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            staged_feed(spark, f"{root}/stage"), merge_batch, f"{root}/ck"
         )
-        q.awaitTermination()
         final_rows, _ = rows_ledger_read(spark, ledger_dir)
         merged = {int(r["word"]): int(r["w"]) for r in final_rows}
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-        shutil.rmtree(ledger_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     words = spark.createDataFrame(
         sorted(merged.items()), "word long, w long"
@@ -2474,12 +2041,10 @@ _attach_bloom_oracle()
     tags=("streaming", "sketch", "checkpoint", "pipeline"),
 )
 def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from ..operators.sketches import (
+        CMS_P,
+        CMS_ROWS,
+        CMS_W,
         KMV_K,
         KMV_P,
         collect_grouped_sketch,
@@ -2492,36 +2057,8 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         sketch_ledger_apply,
         sketch_ledger_read,
     )
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
 
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
     cms_schema = "i int, bucket bigint, c bigint"
-
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    def cms_cells(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h")
-        ).select("h.i", "h.bucket")
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -2530,34 +2067,9 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("value").cast("double").alias("value"),
     )
-    stage = tempfile.mkdtemp(prefix="suite_stage_")
-    roots = [tempfile.mkdtemp(prefix="suite_run_") for _ in range(2)]
-
-    def write_slice(k: int, name: str, mtime: int) -> None:
-        import os as _os
-
-        # two slices, not three: every pinned output (exact counts, CMS
-        # point estimate, KMV distinct estimate) is a full-table value,
-        # independent of how the stream is sliced — so the micro-batch
-        # count is pure fixed overhead. 2 files drop the suite from 7
-        # foreachBatch invocations (crash 2 + restart 2 + control 3) to
-        # 5 (2+1+2) while still exercising the identical tear: batch 0
-        # fully committed, batch 1 torn across families, re-delivered
-        # once on restart. ~30% of the 113s sf0.1 oracle budget was
-        # this overhead (the r10 verdict's headroom item).
-        df = ev.filter(F.col("event_id") % 2 == k).select(
-            "user_id", "win", "value"
-        )
-        tmp = tempfile.mkdtemp(prefix="suite_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in _os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        _os.utime(dst, (mtime, mtime))
+    root = tempfile.mkdtemp(prefix="suite_")
+    stage = f"{root}/stage"
+    runs = [f"{root}/run0", f"{root}/run1"]
 
     skipped: dict[str, list[int]] = {"mrl": [], "cms": [], "kmv": []}
 
@@ -2565,21 +2077,10 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # object-store-safe variant) and the control rides the default
     # directory listing — so the final value-equality pin ALSO pins
     # cross-protocol equivalence through a real crash/restart
-    protocols = {roots[0]: "manifest", roots[1]: "listing"}
+    protocols = {runs[0]: "manifest", runs[1]: "listing"}
 
-    stage_schema: list = []  # read once, after the slices exist
-
-    def run_stream(root: str, crash_in_batch: int | None) -> None:
-        proto = protocols[root]
-        if not stage_schema:
-            stage_schema.append(spark.read.parquet(stage).schema)
-        schema = stage_schema[0]
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
+    def run_stream(run: str, crash_in_batch: int | None) -> None:
+        proto = protocols[run]
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
             bdf.persist()  # three family readers share one batch scan
@@ -2590,12 +2091,12 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if not sketch_ledger_apply(
-                spark, f"{root}/mrl", sk, batch_id, protocol=proto
+                spark, f"{run}/mrl", sk, batch_id, protocol=proto
             ):
                 skipped["mrl"].append(batch_id)
             # family 2: additive CMS ledger
             prev, applied = rows_ledger_read(
-                spark, f"{root}/cms", protocol=proto
+                spark, f"{run}/cms", protocol=proto
             )
             if batch_id <= applied:
                 skipped["cms"].append(batch_id)
@@ -2603,12 +2104,13 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
                          for r in prev}
                 for r in (
-                    cms_cells(bdf).groupBy("i", "bucket").count().collect()
+                    bdf.select(cms_cells(F.col("user_id")))
+                    .groupBy("i", "bucket").count().collect()
                 ):
                     key = (int(r["i"]), int(r["bucket"]))
                     state[key] = state.get(key, 0) + int(r["count"])
                 rows_ledger_commit(
-                    spark, f"{root}/cms",
+                    spark, f"{run}/cms",
                     [(i, b, c) for (i, b), c in sorted(state.items())],
                     cms_schema, batch_id, applied_through=applied,
                     protocol=proto,
@@ -2619,7 +2121,7 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError("injected crash between family commits")
             # family 3: KMV k-smallest-union ledger
             prev, applied = rows_ledger_read(
-                spark, f"{root}/kmv", protocol=proto
+                spark, f"{run}/kmv", protocol=proto
             )
             if batch_id <= applied:
                 skipped["kmv"].append(batch_id)
@@ -2640,21 +2142,17 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ]
                 )
                 rows_ledger_commit(
-                    spark, f"{root}/kmv",
+                    spark, f"{run}/kmv",
                     [("h", v) for v in vals] + [("n", n)],
                     "kind string, v long", batch_id,
                     applied_through=applied, protocol=proto,
                 )
             bdf.unpersist()
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_in_batch is None:
                 raise  # only the injected crash is expected
@@ -2677,43 +2175,49 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark import inheritable_thread_target
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: write_slice(0, "a.parquet", 1_000_000_000)
+            # two slices, not three: every pinned output (exact counts,
+            # CMS point estimate, KMV distinct estimate) is a full-table
+            # value, independent of how the stream is sliced, so each
+            # extra micro-batch is pure fixed overhead. Two still
+            # exercise the identical tear: batch 0 fully committed,
+            # batch 1 torn across families, re-delivered once on restart.
+            staged = [
+                pool.submit(
+                    inheritable_thread_target(spark)(stage_file),
+                    stage,
+                    ev.filter(F.col("event_id") % 2 == k).select(
+                        "user_id", "win", "value"
+                    ),
+                    k,
                 )
-            )
-            fb = pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: write_slice(1, "b.parquet", 1_000_010_000)
-                )
-            )
-            fa.result(), fb.result()
-            # read the stage schema once, before both streams race
-            stage_schema.append(spark.read.parquet(stage).schema)
+                for k in range(2)
+            ]
+            for f in staged:
+                f.result()
 
             def crash_then_restart() -> None:
-                run_stream(roots[0], crash_in_batch=1)
-                run_stream(roots[0], crash_in_batch=None)
+                run_stream(runs[0], crash_in_batch=1)
+                run_stream(runs[0], crash_in_batch=None)
 
             fc = pool.submit(inheritable_thread_target(spark)(crash_then_restart))
             fctrl = pool.submit(
                 inheritable_thread_target(spark)(
-                    lambda: run_stream(roots[1], crash_in_batch=None)
+                    lambda: run_stream(runs[1], crash_in_batch=None)
                 )
             )
             fc.result(), fctrl.result()
 
         finals = {}
-        for tag, root in (("crash", roots[0]), ("ctrl", roots[1])):
-            proto = protocols[root]
+        for tag, run in (("crash", runs[0]), ("ctrl", runs[1])):
+            proto = protocols[run]
             mrl_state, mrl_gen = sketch_ledger_read(
-                spark, f"{root}/mrl", protocol=proto
+                spark, f"{run}/mrl", protocol=proto
             )
             cms_rows, cms_gen = rows_ledger_read(
-                spark, f"{root}/cms", protocol=proto
+                spark, f"{run}/cms", protocol=proto
             )
             kmv_rows, kmv_gen = rows_ledger_read(
-                spark, f"{root}/kmv", protocol=proto
+                spark, f"{run}/kmv", protocol=proto
             )
             finals[tag] = {
                 "mrl": (
@@ -2744,9 +2248,7 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             }
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     # exact counts (distributed; the oracle recomputes all three) —
     # ONE aggregate job instead of three separate count() actions
@@ -2766,11 +2268,11 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     for (i, _b), c in cms_state.items():
         row_sums[i] = row_sums.get(i, 0) + c
     cms_mass_ok = all(
-        row_sums.get(i, 0) == n_events for i in range(len(seeds))
+        row_sums.get(i, 0) == n_events for i in range(len(CMS_ROWS))
     )
     cms_est0 = min(
-        cms_state.get((i, (0 * a + b) % _CMS_P % _CMS_W), 0)
-        for i, a, b in seeds
+        cms_state.get((i, (0 * a + b) % CMS_P % CMS_W), 0)
+        for i, (a, b) in enumerate(CMS_ROWS)
     )
 
     kmv_vals = [v for k_, v in finals["crash"]["kmv"][0] if k_ == "h"]
@@ -2876,11 +2378,6 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_ivf_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from ..operators.similarity import (
         _with_valid_vectors,
         assign_ivf_partitions,
@@ -2895,22 +2392,11 @@ def q_stream_ivf_incremental(
         eager=True
     )
 
-    stage = tempfile.mkdtemp(prefix="ivf_stage_")
-    roots = [tempfile.mkdtemp(prefix="ivf_run_") for _ in range(2)]
-    protocols = {roots[0]: "manifest", roots[1]: "listing"}
+    root = tempfile.mkdtemp(prefix="ivf_")
+    stage = f"{root}/stage"
+    runs = [f"{root}/run0", f"{root}/run1"]
+    protocols = {runs[0]: "manifest", runs[1]: "listing"}
     ledger_schema = "centroid_id long, n long, microcos long"
-
-    def write_slice(df: DataFrame, name: str, mtime: int) -> None:
-        tmp = tempfile.mkdtemp(prefix="ivf_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
 
     # batch 0: the natural delta. batch 1: a constructed distribution
     # shift — every embedding replaced by the all-ones direction, so
@@ -2926,24 +2412,17 @@ def q_stream_ivf_incremental(
         ).alias("embedding"),
     )
 
-    skipped: dict[str, list[int]] = {r: [] for r in roots}
-    signals: dict[str, list[tuple[int, bool, int]]] = {r: [] for r in roots}
+    skipped: dict[str, list[int]] = {r: [] for r in runs}
+    signals: dict[str, list[tuple[int, bool, int]]] = {r: [] for r in runs}
 
-    def run_stream(root: str, crash_in_batch: int | None) -> None:
-        proto = protocols[root]
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
+    def run_stream(run: str, crash_in_batch: int | None) -> None:
+        proto = protocols[run]
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
-            ledger = f"{root}/ledger"
+            ledger = f"{run}/ledger"
             prev, applied = rows_ledger_read(spark, ledger, protocol=proto)
             if batch_id <= applied:
-                skipped[root].append(batch_id)
+                skipped[run].append(batch_id)
                 return
             assigned = assign_ivf_partitions(
                 _with_valid_vectors(bdf, "embedding"), frozen
@@ -2982,38 +2461,34 @@ def q_stream_ivf_incremental(
             # vectors (pure integer comparison)
             total = sum(n for n, _ in state.values())
             max_n = max(n for n, _ in state.values())
-            signals[root].append((batch_id, max_n * 100 >= 40 * total,
-                                  total))
+            signals[run].append((batch_id, max_n * 100 >= 40 * total,
+                                 total))
             # the crash-after-commit window: the ledger generation is
             # committed, the stream checkpoint is not
             if batch_id == crash_in_batch:
                 raise RuntimeError("injected crash after ledger commit")
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_in_batch is None:
                 raise
 
     try:
-        write_slice(natural, "a.parquet", 1_000_000_000)
-        write_slice(drifted, "b.parquet", 1_000_010_000)
-        run_stream(roots[0], crash_in_batch=0)
-        run_stream(roots[0], crash_in_batch=None)
-        run_stream(roots[1], crash_in_batch=None)
+        stage_file(stage, natural, 0)
+        stage_file(stage, drifted, 1)
+        run_stream(runs[0], crash_in_batch=0)
+        run_stream(runs[0], crash_in_batch=None)
+        run_stream(runs[1], crash_in_batch=None)
 
         finals = {}
-        for root in roots:
+        for run in runs:
             rows, gen = rows_ledger_read(
-                spark, f"{root}/ledger", protocol=protocols[root]
+                spark, f"{run}/ledger", protocol=protocols[run]
             )
-            finals[root] = (
+            finals[run] = (
                 sorted(
                     (int(r["centroid_id"]), int(r["n"]), int(r["microcos"]))
                     for r in rows
@@ -3021,20 +2496,18 @@ def q_stream_ivf_incremental(
                 gen,
             )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     n0 = natural.join(
         _with_valid_vectors(emb, "embedding").select("vec_id"), "vec_id",
         "left_semi",
     ).count()
     n1 = drifted.count()
-    restart_equal = bool(finals[roots[0]] == finals[roots[1]])
+    restart_equal = bool(finals[runs[0]] == finals[runs[1]])
     redelivery_refused = bool(
-        skipped[roots[0]] == [0] and skipped[roots[1]] == []
+        skipped[runs[0]] == [0] and skipped[runs[1]] == []
     )
-    ctrl = signals[roots[1]]
+    ctrl = signals[runs[1]]
     mass0_ok = bool(ctrl[0][2] == n0)
     mass1_ok = bool(ctrl[1][2] == n0 + n1)
     rows = [
@@ -3098,50 +2571,27 @@ def q_stream_ivf_incremental(
     tags=("streaming", "retrieval", "bm25", "incremental", "checkpoint"),
 )
 def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
     from .textmining import _BM25_K1, _BM25_B, _BM25_QUERY
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = tempfile.mkdtemp(prefix="bm25_stage_")
-    roots = [tempfile.mkdtemp(prefix="bm25_run_") for _ in range(2)]
-    protocols = {roots[0]: "manifest", roots[1]: "listing"}
-
-    def write_slice(df: DataFrame, name: str, mtime: int) -> None:
-        tmp = tempfile.mkdtemp(prefix="bm25_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
+    root = tempfile.mkdtemp(prefix="bm25_")
+    stage = f"{root}/stage"
+    runs = [f"{root}/run0", f"{root}/run1"]
+    protocols = {runs[0]: "manifest", runs[1]: "listing"}
 
     skipped: dict[str, dict[str, list[int]]] = {
-        r: {"stats": [], "post": []} for r in roots
+        r: {"stats": [], "post": []} for r in runs
     }
 
-    def run_stream(root: str, crash_in_batch: int | None) -> None:
-        proto = protocols[root]
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
+    def run_stream(run: str, crash_in_batch: int | None) -> None:
+        proto = protocols[run]
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
             bdf.persist()
             # ledger 1: additive corpus statistics (exact integers)
             prev, applied = rows_ledger_read(
-                spark, f"{root}/stats", protocol=proto
+                spark, f"{run}/stats", protocol=proto
             )
             batch_stats = bdf.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -3150,12 +2600,12 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("tot"),
             ).first()
             if batch_id <= applied:
-                skipped[root]["stats"].append(batch_id)
+                skipped[run]["stats"].append(batch_id)
             else:
                 n0 = int(prev[0]["n_docs"]) if prev else 0
                 t0 = int(prev[0]["total_dl"]) if prev else 0
                 rows_ledger_commit(
-                    spark, f"{root}/stats",
+                    spark, f"{run}/stats",
                     [(n0 + int(batch_stats["n"]),
                       t0 + int(batch_stats["tot"]))],
                     "n_docs long, total_dl long", batch_id,
@@ -3169,10 +2619,10 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ledger 2: query-term postings (disjoint docs per batch,
             # so the merge is a plain union of exact integer rows)
             prev, applied = rows_ledger_read(
-                spark, f"{root}/post", protocol=proto
+                spark, f"{run}/post", protocol=proto
             )
             if batch_id <= applied:
-                skipped[root]["post"].append(batch_id)
+                skipped[run]["post"].append(batch_id)
             else:
                 state = {
                     (int(r["doc_id"]), r["term"]): (int(r["tf"]),
@@ -3198,7 +2648,7 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                         int(r["tf"]), int(r["dl"])
                     )
                 rows_ledger_commit(
-                    spark, f"{root}/post",
+                    spark, f"{run}/post",
                     [
                         (d, t, tf, dl)
                         for (d, t), (tf, dl) in sorted(state.items())
@@ -3208,41 +2658,31 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             bdf.unpersist()
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            run_foreach_batch(
+                staged_feed(spark, stage), merge_batch, f"{run}/ck"
+            )
         except StreamingQueryException:
             if crash_in_batch is None:
                 raise
 
     try:
-        write_slice(
-            docs.filter(F.col("doc_id") % 2 == 0), "a.parquet",
-            1_000_000_000,
-        )
-        write_slice(
-            docs.filter(F.col("doc_id") % 2 == 1), "b.parquet",
-            1_000_010_000,
-        )
-        run_stream(roots[0], crash_in_batch=1)
-        run_stream(roots[0], crash_in_batch=None)
-        run_stream(roots[1], crash_in_batch=None)
+        for k in range(2):
+            stage_file(stage, docs.filter(F.col("doc_id") % 2 == k), k)
+        run_stream(runs[0], crash_in_batch=1)
+        run_stream(runs[0], crash_in_batch=None)
+        run_stream(runs[1], crash_in_batch=None)
 
         finals = {}
-        for root in roots:
-            proto = protocols[root]
+        for run in runs:
+            proto = protocols[run]
             srows, sgen = rows_ledger_read(
-                spark, f"{root}/stats", protocol=proto
+                spark, f"{run}/stats", protocol=proto
             )
             prows, pgen = rows_ledger_read(
-                spark, f"{root}/post", protocol=proto
+                spark, f"{run}/post", protocol=proto
             )
-            finals[root] = (
+            finals[run] = (
                 sorted((int(r["n_docs"]), int(r["total_dl"]))
                        for r in srows),
                 sgen,
@@ -3254,24 +2694,22 @@ def q_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pgen,
             )
         stats_rows, _ = rows_ledger_read(
-            spark, f"{roots[0]}/stats", protocol="manifest"
+            spark, f"{runs[0]}/stats", protocol="manifest"
         )
         post_rows, _ = rows_ledger_read(
-            spark, f"{roots[0]}/post", protocol="manifest"
+            spark, f"{runs[0]}/post", protocol="manifest"
         )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
-    restart_equal = bool(finals[roots[0]] == finals[roots[1]])
+    restart_equal = bool(finals[runs[0]] == finals[runs[1]])
     stats_refused = bool(
-        skipped[roots[0]]["stats"] == [1]
-        and skipped[roots[1]]["stats"] == []
+        skipped[runs[0]]["stats"] == [1]
+        and skipped[runs[1]]["stats"] == []
     )
     postings_applied = bool(
-        skipped[roots[0]]["post"] == []
-        and skipped[roots[1]]["post"] == []
+        skipped[runs[0]]["post"] == []
+        and skipped[runs[1]]["post"] == []
     )
 
     # score ENTIRELY from ledger state, mirroring _bm25_scores_docs'

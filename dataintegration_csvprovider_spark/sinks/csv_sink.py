@@ -38,14 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import render_number
 from ..functions.text import csv_quote
-
-#: reference encoding map (CSVProvider.cs:603-616)
-ENCODINGS = {
-    "UTF-8": "utf-8",
-    "UTF-16": "utf-16",
-    "Windows-1252": "cp1252",
-    "Windows-1251": "cp1251",
-}
+from ..sources.csv_source import ENCODINGS
 
 
 @dataclass

@@ -8,15 +8,21 @@ sources: file-stream CSV/parquet in, watermarked tumbling/sliding/session
 windows, within-watermark dedup.
 
 Every op is built-in Structured Streaming — no custom state stores. For
-deterministic testing the driver runs a stream to completion with an
-``availableNow`` trigger into a memory sink (one batch, same results as
-batch semantics for complete-mode aggs).
+deterministic testing every stream runs to completion with an
+``availableNow`` trigger: complete and update mode into a memory sink,
+append mode through a parquet file sink that is read back
+(:func:`run_to_completion`). Multi-batch tests stage one file per
+micro-batch (:func:`stage_file`, :func:`staged_feed`) and drive
+``foreachBatch`` consumers through :func:`run_foreach_batch`.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +38,40 @@ def stream_from_parquet(
 ) -> DataFrame:
     """File-source parquet stream (schema must be explicit for streams)."""
     return spark.readStream.format("parquet").schema(schema).load(path)
+
+
+def stage_file(stage: str, df: DataFrame, k: int) -> None:
+    """Write ``df`` into ``stage`` as exactly one parquet file with mtime
+    ``1_000_000_000 + 10_000·k``.
+
+    Invariant: Spark's file source takes new files oldest-mtime first, so
+    under :func:`staged_feed` (one file per trigger) file k becomes
+    micro-batch k. File names carry no order. The scratch write goes to a
+    sibling of ``stage``, never inside it, so a stream listing ``stage``
+    only ever sees the finished file."""
+    tmp = f"{stage}.part{k}"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(
+        p for p in os.listdir(tmp)
+        if p.endswith(".parquet") and not p.startswith("_")
+    )
+    os.makedirs(stage, exist_ok=True)
+    dst = os.path.join(stage, f"slice-{k}.parquet")
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+    mtime = 1_000_000_000 + 10_000 * k
+    os.utime(dst, (mtime, mtime))
+
+
+def staged_feed(spark: SparkSession, stage: str) -> DataFrame:
+    """Parquet file-source stream over ``stage`` that takes one file per
+    trigger, with the schema read from the staged files."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(spark.read.parquet(stage).schema)
+        .option("maxFilesPerTrigger", "1")
+        .load(stage)
+    )
 
 
 def stream_from_csv_source(
@@ -179,67 +219,71 @@ def run_to_completion(
     result as a batch DataFrame. Deterministic: one batch, watermark only
     finalizes after all data is seen.
 
-    Round-14 (r13 verdict item 1, guide §5 — the driver should do no
-    data work): APPEND-mode runs materialize executor-side through a
-    temp parquet FILE sink and are read back. The old memory sink
-    collected every emitted row onto the DRIVER as external rows —
-    ~95k closed sessions at sf0.1 for q_stream_session_append, and the
-    full deduped event stream for the watermark-dedup heads — the
-    root-caused source of the documented 8-18 s GC modes, and a
-    driver-memory scale-killer on an unbounded stream. The file sink's
-    _spark_metadata commit log makes the read-back exact (only
-    committed files are visible); the schema is pinned from the stream
-    plan so a zero-row result reads back as an empty frame instead of
-    failing inference. COMPLETE mode keeps the memory sink: the file
-    sink cannot express complete-mode re-emission, and complete-mode
-    results are bounded aggregates by construction."""
+    APPEND mode materializes executor-side through a temp parquet FILE
+    sink and reads it back, so the emitted rows stay on the executors.
+    The file sink's _spark_metadata commit log makes the read-back exact
+    (only committed files are visible); the schema is pinned from the
+    stream plan so a zero-row result reads back as an empty frame. The
+    checkpoint directory is deleted once the query terminates; the sink
+    directory stays, because the returned frame reads it lazily.
+    COMPLETE and UPDATE modes use the memory sink: the file sink cannot
+    express re-emission, and those results are bounded aggregates by
+    construction."""
     if output_mode == "append":
-        import tempfile
-
-        # sink-width repartition (guide §6 — coalesce on write): without
-        # it every state-store partition writes its own tiny file (33
-        # files for ~95k session rows at sf0.1; commit + read-back
-        # listing cost ~1 s). A REPARTITION — a real exchange, so the
-        # stateful operators keep their required shuffle-partition
-        # count — funnels the emitted rows into cores/8 sink tasks.
-        # Scale-adaptive (a fraction of cluster width, no constant);
-        # measured min-of-3 at sf0.1: session_append 3.6 -> 2.3 s,
-        # spread 3.6-4.3 -> 2.3-2.6 s.
+        # sink-width repartition: without it every state-store partition
+        # writes its own tiny file. A REPARTITION (a real exchange, so the
+        # stateful operators keep their shuffle-partition count) funnels
+        # the emitted rows into cores/8 sink tasks.
         k = max(
             1, stream_df.sparkSession.sparkContext.defaultParallelism // 8
         )
         out_dir = tempfile.mkdtemp(prefix="stream_sink_")
         ck_dir = tempfile.mkdtemp(prefix="stream_sink_ck_")
-        q = (
-            stream_df.repartition(k)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        try:
+            (
+                stream_df.repartition(k)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ck_dir)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        finally:
+            shutil.rmtree(ck_dir, ignore_errors=True)
         return (
             stream_df.sparkSession.read.schema(stream_df.schema)
             .parquet(out_dir)
         )
-    name = f"stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
+    return run_with_progress(stream_df, output_mode)[0]
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    on_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> None:
+    """Run ``on_batch(batch_df, batch_id)`` over every micro-batch of
+    ``stream_df`` (availableNow trigger, offsets checkpointed under
+    ``checkpoint``) and wait for the query to finish. An exception in
+    ``on_batch`` stops the query and propagates as
+    ``StreamingQueryException``; a restart from the same checkpoint
+    re-delivers the batch that failed."""
+    (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
 
 
 def run_with_progress(
     stream_df: DataFrame, output_mode: str = "complete"
 ) -> tuple[DataFrame, list[dict]]:
-    """Like :func:`run_to_completion`, but also returns the query's
+    """Run ``stream_df`` to completion into a memory sink (complete or
+    update mode) and return the result table together with the query's
     per-batch :class:`StreamingQueryProgress` records as plain dicts.
 
     The progress stream is the production observability contract for a
@@ -277,36 +321,6 @@ def observe_rows(df: DataFrame, name: str = "engine_metrics") -> DataFrame:
     return df.observe(name, F.count(F.lit(1)).alias("n_rows"))
 
 
-def stream_to_csv_sink(
-    stream_df: DataFrame,
-    sink,
-    table: str,
-    checkpoint_dir: str,
-    output_mode: str = "complete",
-) -> str:
-    """Drive a streaming DataFrame through ``foreachBatch`` into the
-    engine's :class:`~..sinks.csv_sink.CsvSink` — the reference's CSV
-    destination semantics (quoting, NULL sentinel, header) fed by a
-    stream. The checkpoint directory provides restart/exactly-once
-    bookkeeping; with the availableNow trigger this runs one batch and
-    returns the final CSV path. Complete mode rewrites the file per
-    batch, which matches the reference's whole-file output contract."""
-    result = {}
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result["path"] = sink.write(batch_df, table)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result["path"]
-
-
 def stream_upsert_state(
     stream_df: DataFrame,
     state_dir: str,
@@ -330,8 +344,6 @@ def stream_upsert_state(
     key. Returns the final state as a batch DataFrame (tombstones
     included; callers filter).
     """
-    import uuid as _uuid
-
     from pyspark.sql import Window as W
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -359,76 +371,5 @@ def stream_upsert_state(
         winner = winner.localCheckpoint(eager=True)
         winner.write.mode("overwrite").parquet(state_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, merge_batch, checkpoint_dir)
     return stream_df.sparkSession.read.parquet(state_dir)
-
-
-def stateful_user_totals_v2(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """The stateful_user_totals state machine re-expressed on Spark 4's
-    transformWithStateInPandas — the successor API to
-    applyInPandasWithState: named state variables on a RocksDB-backed
-    store (changelog-checkpointable, state-schema-evolvable) instead of
-    one opaque tuple, explicit init/close lifecycle, timer support.
-
-    Same contract as v1: one (count, sum) per key per micro-batch in
-    update mode. Requires the RocksDB state store provider (set by the
-    caller or session factory) AND the protobuf Python package — the
-    TWS state-API client speaks protobuf to the JVM state server; in
-    environments without it the streaming query fails with a driver-
-    worker crash, so callers must gate on
-    ``importlib.util.find_spec("google.protobuf")`` (the unit test
-    does; no registry query depends on this path)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf[value_col].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "total": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

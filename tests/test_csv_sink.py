@@ -71,11 +71,20 @@ def test_timestamped_filename(spark, tmp_path):
 
 
 def test_encoding_utf16_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([("café",)], "x string")
-    sink = CsvSink(folder=str(tmp_path), options=CsvSinkOptions(encoding="UTF-16"))
-    path = sink.write(df, "out")
-    text = open(path, encoding="utf-16").read()
-    assert '"café"' in text
+    # reference encoding name -> the Python codec the output must decode
+    # with (the sink shares the source's Java-named table)
+    for name, codec, value in (
+        ("UTF-16", "utf-16", "café"),
+        ("Windows-1252", "cp1252", "café"),
+        ("Windows-1251", "cp1251", "кафе"),
+    ):
+        df = spark.createDataFrame([(value,)], "x string")
+        sink = CsvSink(
+            folder=str(tmp_path / codec), options=CsvSinkOptions(encoding=name)
+        )
+        path = sink.write(df, "out")
+        text = open(path, encoding=codec).read()
+        assert f'"{value}"' in text, name
 
 
 def test_multi_part_scale_mode(spark, tmp_path):

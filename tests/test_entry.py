@@ -27,3 +27,12 @@ def test_each_query_runs_smoke(spark, sf_dir):
     for name, q in ent.queries().items():
         df = q(spark, sf_dir)
         assert df.limit(1).count() >= 0, name
+
+
+def test_grade_first_lists_each_name_once():
+    # a repeated name cannot move anything (first occurrence wins), so
+    # every repeat is dead weight in the ordering list
+    from dataintegration_csvprovider_spark.queries.registry import _GRADE_FIRST
+
+    repeats = sorted({n for n in _GRADE_FIRST if _GRADE_FIRST.count(n) > 1})
+    assert repeats == []

@@ -1,9 +1,7 @@
 """Registry-level smoke for the optional-dependency gates (verdict r5
 item 5): the pillow-gated multimodal queries must REGISTER AND RUN when
 the dep is present, and must NOT register when it is absent — so the
-conditional registration can't rot in either direction. (The protobuf
-gate has no registry entry by design; its conditional path is covered by
-tests/test_streaming.py::test_stateful_v2_transform_with_state.)
+conditional registration can't rot in either direction.
 """
 
 import pytest

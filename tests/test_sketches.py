@@ -536,3 +536,27 @@ def test_table_ledger_laws(spark, tmp_path):
     # the documented difference between the two commit points
     _, applied_listing = table_ledger_read(spark, ledger)
     assert applied_listing == 5
+
+
+def test_cms_cells_match_python_hash(spark):
+    # the decimal(20,0) multiply must stay exact past the bigint-overflow
+    # point: 2^62 * a overflows a long for every row's multiplier
+    from dataintegration_csvprovider_spark.operators.sketches import (
+        CMS_P,
+        CMS_ROWS,
+        CMS_W,
+        cms_cells,
+    )
+
+    ids = [0, 1, 2**31 - 1, 2**62]
+    df = spark.createDataFrame([(x,) for x in ids], "x bigint")
+    got = {
+        (r["x"], r["i"], r["bucket"])
+        for r in df.select("x", cms_cells(F.col("x"))).collect()
+    }
+    want = {
+        (x, i, (x * a + b) % CMS_P % CMS_W)
+        for x in ids
+        for i, (a, b) in enumerate(CMS_ROWS)
+    }
+    assert got == want

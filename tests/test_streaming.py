@@ -100,45 +100,6 @@ def test_csv_file_source_stream(spark, tmp_path):
     assert rows == {(0, "click"): (1, 1.5), (0, "view"): (1, 2.5), (1, "click"): (1, 3.0)}
 
 
-def test_stream_to_csv_sink_roundtrip(spark, sf_dir, tmp_path):
-    # stream -> windowed agg -> foreachBatch -> CsvSink -> CsvSource:
-    # the reference's CSV destination fed by Structured Streaming, with
-    # checkpointed exactly-once bookkeeping
-    from pyspark.sql import functions as F
-
-    from dataintegration_csvprovider_spark.catalog import load_table
-    from dataintegration_csvprovider_spark.queries.streaming import (
-        _events_stream,
-    )
-    from dataintegration_csvprovider_spark.sinks.csv_sink import CsvSink
-    from dataintegration_csvprovider_spark.sources.csv_source import CsvSource
-    from dataintegration_csvprovider_spark.streaming.events import (
-        stream_to_csv_sink,
-        tumbling_agg,
-    )
-
-    agg = tumbling_agg(_events_stream(spark, sf_dir), window="1 hour")
-    flat = agg.select(
-        F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("win"),
-        "event_type",
-        "n",
-    )
-    sink = CsvSink(folder=str(tmp_path / "out"))
-    path = stream_to_csv_sink(
-        flat, sink, "hourly", checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    assert path.endswith("hourly.csv")
-    back = CsvSource(folder=str(tmp_path / "out")).read(spark, "hourly")
-    # equals the batch computation over the same fixture
-    events = load_table(spark, sf_dir, "events")
-    expected = (
-        events.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).count().count()
-    )
-    assert back.count() == expected
-
-
 def test_stream_upsert_state_late_arrival(spark, tmp_path):
     """A later micro-batch carrying an OLDER event must not overwrite
     newer state, and a delete tombstone must not be resurrected."""
@@ -179,65 +140,6 @@ def test_stream_upsert_state_late_arrival(spark, tmp_path):
     # user 1: purchase (t=5) wins over click (t=1) in any batch order;
     # user 2: the error tombstone (t=5) wins over view (t=1)
     assert out == {1: "purchase", 2: "error"}
-
-
-def test_stateful_v2_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas parity with the v1 state machine —
-    runs only where the protobuf dependency for the TWS state client
-    exists (not in this container; the operator is dependency-gated)."""
-    import importlib.util
-
-    import pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("google.protobuf not installed (TWS client dependency)")
-
-    from pyspark.sql import functions as F
-
-    from dataintegration_csvprovider_spark.streaming.events import (
-        run_to_completion,
-        stateful_user_totals_v2,
-    )
-
-    src = str(tmp_path / "feed")
-    spark.createDataFrame(
-        [(1, 2.0), (1, 3.0), (2, 1.0)], "user_id long, value double"
-    ).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    feed = spark.readStream.schema(schema).parquet(src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_completion(
-            stateful_user_totals_v2(feed), output_mode="update"
-        )
-        got = {
-            (r["user_id"], r["n_events"], r["total"])
-            for r in out.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("total").alias("total"),
-            )
-            .collect()
-        }
-        assert got == {(1, 2, 5.0), (2, 1, 1.0)}
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
 
 
 def test_progress_state_metrics_tumbling(spark, tmp_path):
@@ -321,3 +223,19 @@ def test_stream_contamination_flags_stateless(spark, tmp_path):
     out = run_to_completion(flags, output_mode="append").collect()
     # exactly one marked window: doc 1 pos 2 (the 5-token leak)
     assert [(r.id, r.pos) for r in out] == [(1, 2)]
+
+
+def test_stream_exactly_once_leaves_no_temp_dirs(spark, tmp_path, monkeypatch):
+    # the query materializes its ledger read and then deletes its one
+    # temp root, so nothing it created outlives the call
+    import tempfile
+
+    from dataintegration_csvprovider_spark.queries.streaming import (
+        q_stream_exactly_once,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf01 = SF.replace("sf0.001", "sf0.01")
+    rows = q_stream_exactly_once(spark, sf01).collect()
+    assert rows
+    assert list(tmp_path.iterdir()) == []

@@ -712,17 +712,13 @@ def probe_heads(spark, path: str) -> dict[str, float]:
         exact_substring_dedup,
     )
     from dataintegration_csvprovider_spark.operators.sketches import (
+        cms_cells,
         collect_grouped_sketch,
         grouped_quantile_sketch_rows,
         kmv_sketch,
         rows_ledger_commit,
         rows_ledger_read,
         sketch_ledger_apply,
-    )
-    from dataintegration_csvprovider_spark.queries.profiling import (
-        _CMS_P,
-        _CMS_ROWS,
-        _CMS_W,
     )
 
     docs = spark.read.parquet(path)
@@ -745,27 +741,7 @@ def probe_heads(spark, path: str) -> dict[str, float]:
                 )
             )
             sketch_ledger_apply(spark, f"{root}/mrl", sk, 0)
-            cells = bdf.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).alias("i"),
-                                F.pmod(
-                                    F.pmod(
-                                        F.col("user_id").cast("decimal(20,0)")
-                                        * F.lit(a).cast("decimal(10,0)")
-                                        + F.lit(b).cast("decimal(10,0)"),
-                                        F.lit(_CMS_P).cast("decimal(20,0)"),
-                                    ).cast("bigint"),
-                                    F.lit(_CMS_W),
-                                ).alias("bucket"),
-                            )
-                            for i, (a, b) in enumerate(_CMS_ROWS)
-                        ]
-                    )
-                ).alias("h")
-            ).select("h.i", "h.bucket")
+            cells = bdf.select(cms_cells(F.col("user_id")))
             state = {
                 (int(r["i"]), int(r["bucket"])): int(r["count"])
                 for r in cells.groupBy("i", "bucket").count().collect()
